@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -82,46 +80,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session extension registering the engine's native functions; activate
-  * with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * (done by graft.Verify / graft.Bench). Query code falls back to the
-  * interpreted HOF form when the extension is absent, so plain sessions
-  * still work. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_cosine requires exactly 2 arguments, got ${children.length}")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "graft_l2sq"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_l2sq requires exactly 2 arguments, got ${children.length}")
-        L2Squared(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lsh_bands"),
-      new ExpressionInfo(classOf[LshBands].getName, "graft_lsh_bands"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          s"graft_lsh_bands requires exactly 3 arguments, got ${children.length}")
-        LshBands(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[Simhash64].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_simhash64 requires exactly 1 argument, got ${children.length}")
-        Simhash64(children.head)
-      }))
-  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (JVM-wide; suites must not
@@ -16,6 +18,9 @@ object TestSpark {
       .appName("graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // "No Partition Defined for Window operation!": every single-partition
+    // window is pinned to AuditSpec's allowlist, so the warning is noise here
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
