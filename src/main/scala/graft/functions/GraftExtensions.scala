@@ -1,13 +1,16 @@
 package graft.functions
 
+import graft.sources.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SparkConf
 import org.apache.spark.graft.ActiveConf
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension carrying the engine's session default (the codegen
-  * cache size, see [[GraftExtensions.applyDefaults]]) and registering the
+/** Session extension carrying the engine's session defaults (the codegen
+  * cache size and the fork-free local filesystem, see
+  * [[GraftExtensions.applyDefaults]]) and registering the
   * engine's four native functions (`graft_cosine`, `graft_l2sq`,
   * `graft_lsh_bands`, `graft_simhash64`); activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
@@ -17,6 +20,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ActiveConf.get.foreach(GraftExtensions.applyDefaults)
+    ActiveConf.hadoop.foreach(GraftExtensions.applyDefaults)
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
@@ -78,4 +82,27 @@ object GraftExtensions {
     * if the SparkContext already has a SharedState. */
   def applyDefaults(conf: SparkConf): Unit =
     conf.setIfMissing(CodegenCacheKey, CodegenCacheEntries.toString)
+
+  val LocalFsKey = "fs.file.impl"
+  val LocalFcKey = "fs.AbstractFileSystem.file.impl"
+  /** `core-default.xml`'s value of [[LocalFcKey]]: treated as unset. */
+  val StockLocalFc = "org.apache.hadoop.fs.local.LocalFs"
+
+  /** Registers [[graft.sources.ForkFreeLocalFileSystem]] for `FileSystem`
+    * callers and [[graft.sources.ForkFreeLocalFs]] for `FileContext` ones
+    * (stream checkpoints) as the `file://` implementation, where the user
+    * has not set one. Only `file://` changes; other schemes are untouched.
+    *
+    * The extension applies them to the active SparkContext's
+    * `hadoopConfiguration`, which every session's Hadoop conf copies.
+    * `FileSystem.get` caches one `file://` instance per JVM, so this has no
+    * effect on `FileSystem` callers if a local FileSystem was created in
+    * this JVM before the session (a `FileContext` builds a new one each
+    * time and is not affected). */
+  def applyDefaults(conf: Configuration): Unit = {
+    if (conf.get(LocalFsKey, "").isEmpty)
+      conf.set(LocalFsKey, classOf[ForkFreeLocalFileSystem].getName)
+    if (Option(conf.get(LocalFcKey)).forall(_ == StockLocalFc))
+      conf.set(LocalFcKey, classOf[ForkFreeLocalFs].getName)
+  }
 }

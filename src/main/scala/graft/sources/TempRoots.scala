@@ -6,8 +6,7 @@ package graft.sources
   * root so no side effects escape a query function) and of the streaming
   * harness's transient-checkpoint teardown. Throws on I/O failure by
   * default so a leaked root is loud; pass `swallow = true` where cleanup
-  * is explicitly best-effort (tmpfs checkpoint dirs clear on reboot
-  * anyway). */
+  * is explicitly best-effort (transient stream checkpoints). */
 object TempRoots {
   def deleteRecursively(root: java.nio.file.Path, swallow: Boolean = false): Unit = {
     import scala.jdk.CollectionConverters._

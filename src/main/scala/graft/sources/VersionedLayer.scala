@@ -327,15 +327,15 @@ object VersionedLayer {
     }.toMap
   }
 
-  private def listParquetRec(f: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val it = f.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) buf += st
+  /** Every file under `dir`, by a `listStatus` walk (hive-layouted pools
+    * nest files under k=v dirs). Not `listFiles`: it builds a
+    * `LocatedFileStatus` per file, which loads the file's permission, and
+    * Hadoop's local filesystem does that with an `ls -ld` subprocess when
+    * libhadoop is absent. */
+  private def listFilesRec(f: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    f.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) listFilesRec(f, st.getPath) else Seq(st)
     }
-    buf.toSeq
-  }
 
   /** Stage `df` as immutable parquet files under a fresh `_data/<uuid>`
     * pool and return their manifest entries. Per-file row counts and
@@ -380,7 +380,8 @@ object VersionedLayer {
       .filter(fd => !layout.contains(fd.name) && isStatsType(fd.dataType))
       .take(MaxStatsCols)
     val poolAbs = f.makeQualified(pool).toUri.getPath
-    val parts = CommitPhases.timed("stage.listPool")(listParquetRec(f, pool))
+    val parts = CommitPhases.timed("stage.listPool")(listFilesRec(f, pool))
+      .filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(st => st.getPath.toUri.getPath)
     // footer reads are independent driver-side IO — parallelize on a
     // bounded pool so a many-file commit (sorted compact, wide blind
@@ -1308,13 +1309,9 @@ object VersionedLayer {
     val rootAbs = absRoot(spark, root)
     if (f.exists(dd))
       for (pool <- f.listStatus(dd) if pool.isDirectory) {
-        // recursive walk: hive-layouted pools nest files under k=v dirs
-        val it = f.listFiles(pool.getPath, true)
-        while (it.hasNext) {
-          val file = it.next()
-          val rel = relativize(file.getPath.toString, rootAbs)
-          if (!referenced.contains(rel)) f.delete(file.getPath, true)
-        }
+        for (file <- listFilesRec(f, pool.getPath)
+             if !referenced.contains(relativize(file.getPath.toString, rootAbs)))
+          f.delete(file.getPath, true)
         pruneEmptyDirs(f, pool.getPath)
         ()
       }

@@ -1,5 +1,6 @@
 package org.apache.spark.graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.{SparkConf, SparkContext}
 
 /** The active SparkContext's own conf. `SparkContext.getActive` and
@@ -9,4 +10,7 @@ import org.apache.spark.{SparkConf, SparkContext}
 object ActiveConf {
   /** The live conf of the active SparkContext, if there is one. */
   def get: Option[SparkConf] = SparkContext.getActive.map(_.conf)
+
+  /** The active SparkContext's `hadoopConfiguration`, if there is one. */
+  def hadoop: Option[Configuration] = SparkContext.getActive.map(_.hadoopConfiguration)
 }

@@ -59,7 +59,10 @@ class TablesProbeSpec extends AnyFunSuite with Matchers {
       .addField(Types.optional(PrimitiveTypeName.BINARY)
         .as(LogicalTypeAnnotation.stringType()).named("props"))
       .named("spark_schema")
-    val conf = new Configuration()
+    // a copy of the session's conf: `FileSystem.get` caches one file://
+    // instance per JVM, and one built from a plain Configuration before the
+    // session would be Hadoop's class rather than the session's
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val writer = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(new Path(s"$dir/events.parquet"), conf))
       .withType(schema).withConf(conf).build()
