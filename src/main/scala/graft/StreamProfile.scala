@@ -29,19 +29,10 @@ object StreamProfile {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
       val t0 = System.nanoTime()
-      var w = agg.writeStream.format("memory").queryName(s"prof_$name")
+      val w = agg.writeStream.format("memory").queryName(s"prof_$name")
         .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-      // tmpfs checkpoints are RAM — delete after the run (the harness's
-      // transientCheckpointDir discipline), or repeated profiling sessions
-      // exhaust /dev/shm and state commits start failing
-      val ckpt = if (sys.env.get("SPARK_GRAFT_SHM_CKPT").contains("1"))
-        Some(java.nio.file.Paths.get(s"/dev/shm/graft_prof_ckpt_${System.nanoTime()}"))
-      else None
-      ckpt.foreach(p => w = w.option("checkpointLocation", p.toString))
       // cleanup runs even when the profiled stream fails or is interrupted:
-      // a leaked /dev/shm checkpoint is exactly the exhaustion the tmpfs
-      // comment above warns about, and a leaked shuffle-partition override
-      // would skew every later profile leg
+      // a leaked shuffle-partition override would skew every later profile leg
       try {
         val q = w.start()
         val tStart = (System.nanoTime() - t0) / 1e9
@@ -58,7 +49,6 @@ object StreamProfile {
       } finally {
         spark.streams.resetTerminated()
         try spark.catalog.dropTempView(s"prof_$name") catch { case _: Exception => () }
-        ckpt.foreach(p => graft.sources.TempRoots.deleteRecursively(p, swallow = true))
         spark.conf.set("spark.sql.shuffle.partitions", prev)
       }
     }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension carrying the engine's session defaults (the codegen
-  * cache size and the fork-free local filesystem, see
-  * [[GraftExtensions.applyDefaults]]) and registering the
+  * cache size, id-free generated class names and the fork-free local
+  * filesystem, see [[GraftExtensions.applyDefaults]]) and registering the
   * engine's four native functions (`graft_cosine`, `graft_l2sq`,
   * `graft_lsh_bands`, `graft_simhash64`); activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
@@ -72,7 +72,14 @@ object GraftExtensions {
     * 11 MB per JVM. */
   val CodegenCacheEntries = 400
 
-  /** Sets the engine's defaults on `conf` where the user has not set them.
+  /** Spark names whole-stage classes after their codegen stage id by
+    * default. AQE numbers stages anew on every run, so a re-run of one plan
+    * generated differently named classes, missed the cache and compiled
+    * them again; the engine leaves the id out of the name. */
+  val CodegenIdInClassNameKey = "spark.sql.codegen.useIdInClassName"
+
+  /** Sets the engine's defaults on `conf` where the user has not set them:
+    * the codegen cache size and id-free class names.
     *
     * The extension applies them to the active SparkContext's conf inside
     * `getOrCreate`, before the new session's SharedState copies that conf
@@ -80,8 +87,10 @@ object GraftExtensions {
     * `SQLConf.get` when `CodeGenerator` first initialises, so this has no
     * effect if `CodeGenerator` already compiled something in this JVM, or
     * if the SparkContext already has a SharedState. */
-  def applyDefaults(conf: SparkConf): Unit =
+  def applyDefaults(conf: SparkConf): Unit = {
     conf.setIfMissing(CodegenCacheKey, CodegenCacheEntries.toString)
+    conf.setIfMissing(CodegenIdInClassNameKey, "false")
+  }
 
   val LocalFsKey = "fs.file.impl"
   val LocalFcKey = "fs.AbstractFileSystem.file.impl"

@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.QueryModule
 import graft.sources.Tables
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate CLUSTER formation — the step that turns pairwise dedup
@@ -25,18 +25,19 @@ import org.apache.spark.sql.functions._
   * (asserted in ClusterSpec).
   *
   * Scale design (the part that matters at 100 TB):
-  *  - a round is two shuffled min-aggregations + two equi-joins over narrow
-  *    (BIGINT, BIGINT) edge rows — never a neighbor-list `collect_set` (a
-  *    hot node under star contraction can accumulate millions of neighbors;
-  *    as a map-side-combined `min` aggregate it costs one long per task,
-  *    as a list row it would OOM the reducer);
+  *  - a round is two unordered `min` windows and one `distinct` over
+  *    narrow (BIGINT, BIGINT) edge rows: three shuffles, no joins and no
+  *    separate aggregates — never a neighbor-list `collect_set`. A hot
+  *    node's edges go to one reducer (as in a join keyed on it), where the
+  *    window buffer spills past its threshold instead of holding a list;
   *  - per-round `localCheckpoint` truncates the iterative lineage so the
   *    plan does not grow exponentially with rounds (on a multi-executor
   *    cluster a reliable `checkpoint` to the DFS does the same job with
   *    fault tolerance across executor loss);
-  *  - convergence is detected from a per-round (count, hash-sum) scalar
-  *    aggregate — a driver-side SCALAR, never a collected edge list;
-  *  - the driver loop is O(log² n) rounds, each a constant number of jobs.
+  *  - convergence is detected from a per-round (count, hash-sum) SCALAR,
+  *    collected as observed metrics of the checkpoint job itself — no
+  *    extra pass, never a collected edge list;
+  *  - the driver loop is O(log² n) rounds of four jobs each.
   *
   * Reference scope: the reference pipeline dedups by exact key only
   * (`glue/etl_api.py:31`); cluster-collapse is part of the training-data
@@ -58,35 +59,33 @@ object Cluster extends QueryModule {
     * label is their own id — join with coalesce, see [[dedupClusters]]).
     * Also returns the round count (for the convergence-rate spec). */
   def connectedComponentsWithRounds(edges0: DataFrame, maxRounds: Int = 30): (DataFrame, Int) = {
-    def fingerprint(e: DataFrame): (Long, String) = {
-      // hash-sum in DECIMAL(38,0): xxhash64 spans the full long range and a
-      // long sum would trip ANSI overflow on ~3 edges
-      val r = e.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
+    // Checkpoints `e` and returns its (count, hash-sum) fingerprint, observed
+    // during the checkpoint job. The hash-sum is DECIMAL(38,0): xxhash64
+    // spans the full long range and a long sum would trip ANSI overflow.
+    def checkpoint(e: DataFrame): (DataFrame, (Long, String)) = {
+      val obs = Observation()
+      val c = e.observe(obs, count(lit(1)).as("n"),
+        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h")).localCheckpoint()
+      val m = obs.get
+      (c, (m("n").asInstanceOf[Long], Option(m("h")).fold("0")(_.toString)))
     }
-    var edges = canon(edges0).localCheckpoint()
-    var fp = fingerprint(edges)
+    var (edges, fp) = checkpoint(canon(edges0))
     var rounds = 0
     var done = fp._1 == 0L
     while (!done && rounds < maxRounds) {
       // Large-star: m(u) = min(Γ(u) ∪ {u}); rewire every neighbor v > u to
-      // m(u). The min is computed over the symmetrized edges as a plain
-      // aggregate (map-side combine), then joined back — no neighbor lists.
-      val sym = edges.select(col("u"), col("v"))
-        .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = canon(
-        sym.filter(col("v") > col("u")).join(lsMin, "u")
-          .select(col("v").as("a"), col("m").as("b")))
+      // m(u). (m(u), v) is already canonical: m(u) <= u < v.
+      val ls = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
+        .filter(col("v") > col("u"))
+        .select(least(col("u"), col("m")).as("u"), col("v"))
       // Small-star on the canonical (u < v) orientation: for each node v,
       // m = min of its smaller neighbors; rewire those neighbors and v to m.
-      val ssMin = ls.groupBy(col("v")).agg(min(col("u")).as("m"))
-      val ss = canon(
-        ls.join(ssMin, "v").select(col("u").as("a"), col("m").as("b"))
-          .unionAll(ssMin.select(col("v").as("a"), col("m").as("b"))))
-      val next = ss.localCheckpoint()
-      val fp2 = fingerprint(next)
+      val ss = ls.withColumn("m", min(col("u")).over(Window.partitionBy(col("v"))))
+        .select(col("m").as("u"), explode(array(col("u"), col("v"))).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+      val (next, fp2) = checkpoint(ss)
       done = fp2 == fp
       fp = fp2
       edges = next

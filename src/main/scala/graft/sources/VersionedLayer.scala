@@ -1115,7 +1115,7 @@ object VersionedLayer {
     val spark = keys.sparkSession
     val v = latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no published version under $root"))
-    withMaterializedDelta(dedupedKeys(keys, keyCols)) { k =>
+    withMaterializedDelta(keyColumns(keys, keyCols)) { k =>
       val (man, _) = deletedSnapshot(spark, root, v, k, keyCols)
       publish(spark, root, man, None).get
     }
@@ -1138,7 +1138,7 @@ object VersionedLayer {
     val spark = keys.sparkSession
     latestVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no published version under $root"))
-    withMaterializedDelta(dedupedKeys(keys, keyCols)) { k =>
+    withMaterializedDelta(keyColumns(keys, keyCols)) { k =>
       serializableCommit(spark, root, "deleteKeysSerializable", maxRetries, waitMs) { base =>
         val v = base.getOrElse(throw new IllegalStateException(
           s"no published version under $root"))
@@ -1147,8 +1147,10 @@ object VersionedLayer {
     }
   }
 
-  private def dedupedKeys(keys: DataFrame, keyCols: Seq[String]): DataFrame =
-    keys.select(keyCols.map(keys(_)): _*).dropDuplicates(keyCols)
+  // no dropDuplicates: the bounds agg, the left-semi discovery and the
+  // left-anti rewrite give the same result with repeated keys
+  private def keyColumns(keys: DataFrame, keyCols: Seq[String]): DataFrame =
+    keys.select(keyCols.map(keys(_)): _*)
 
   /** Derive the post-delete manifest from base version `v`: files that can
     * hold a matched key are rewritten as their anti-join survivors, every

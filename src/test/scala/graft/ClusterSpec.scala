@@ -1,13 +1,14 @@
 package graft
 
 import graft.operators.Cluster
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Connected-components correctness on planted graphs (the fixture-corpus
-  * values are covered by the q76/q77 oracle gate) plus the two properties
-  * that matter at scale: logarithmic round count on high-diameter graphs and
-  * an all-equi-join plan. */
+  * values are covered by the q76/q77 oracle gate) plus the properties that
+  * matter at scale: logarithmic round count on high-diameter graphs, a
+  * constant number of jobs per round and an all-equi-join plan. */
 class ClusterSpec extends AnyFunSuite with Matchers {
   import TestSpark.{spark, sf0001}
 
@@ -33,16 +34,84 @@ class ClusterSpec extends AnyFunSuite with Matchers {
     parent.keys.map(k => k -> find(k)).toMap.filter { case (k, v) => k != v }
   }
 
+  private val cliques =
+    (for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)) ++
+      (for (i <- 10L to 13L; j <- (i + 1) to 13L) yield (i, j)) :+ ((3L, 10L))
+  private val chain = (0L until 63L).map(i => (i, i + 1))
+
+  /** `body`'s result and the Spark jobs it started, counted by a job tag.
+    * The listener bus delivers events in order, so once a marker job's
+    * start is seen every earlier job of `body` has been counted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"cc-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val tags = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)
+        if (tags(tag)) jobs.incrementAndGet()
+        if (tags(tag + "-end")) marker.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val r = try body finally sc.removeJobTag(tag)
+      sc.addJobTag(tag + "-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(tag + "-end")
+      marker.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      (r, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Seeded random multigraph on `n` nodes with duplicate, reversed and
+    * self-loop edges planted among `m` random ones. */
+  private def messyGraph(seed: Int, n: Int = 150, m: Int = 160): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val base = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val dups = base.take(m / 8)
+    val reversed = base.slice(m / 8, m / 4).map(_.swap)
+    val loops = Seq.fill(m / 16)(rnd.nextInt(n).toLong).map(x => (x, x))
+    rnd.shuffle(base ++ dups ++ reversed ++ loops)
+  }
+
+  test("a round costs at most four jobs, plus two for the input") {
+    import spark.implicits._
+    Seq(cliques, chain).foreach { g =>
+      val edges = g.toDF("a", "b")
+      val ((_, rounds), jobs) = jobsOf(Cluster.connectedComponentsWithRounds(edges))
+      rounds should be > 0
+      withClue(s"$rounds rounds: ") { jobs should be <= 2 + 4 * rounds }
+    }
+  }
+
+  test("star contraction matches union-find on messy seeded multigraphs") {
+    (1 to 5).foreach { seed =>
+      val g = messyGraph(seed)
+      withClue(s"seed $seed: ") { cc(g)._1 shouldBe brute(g) }
+    }
+  }
+
+  test("round counts on the planted graphs are pinned") {
+    val star = (0L until 100L).map(i => (i, 100L))
+    val perm = new scala.util.Random(7).shuffle((0L until 64L).toVector)
+    val shuffledChain = (0 until 63).map(i => (perm(i), perm(i + 1)))
+    val got = Seq(cliques, chain, shuffledChain, star, messyGraph(1), messyGraph(2))
+      .map(g => cc(g)._2)
+    // a round's edge set is fixed by the algorithm, not by its physical
+    // plan, so these counts hold for any correct formulation of a round
+    got shouldBe Seq(3, 7, 6, 2, 5, 5)
+  }
+
   test("two cliques joined by a bridge collapse to one component") {
-    val cliqueA = for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)
-    val cliqueB = for (i <- 10L to 13L; j <- (i + 1) to 13L) yield (i, j)
-    val (labels, _) = cc(cliqueA ++ cliqueB ++ Seq((3L, 10L)))
+    val (labels, _) = cc(cliques)
     labels.values.toSet shouldBe Set(0L)
     labels.keySet shouldBe (1L to 3L).toSet ++ (10L to 13L).toSet
   }
 
   test("a 64-node chain converges in O(log n) rounds, not O(diameter)") {
-    val chain = (0L until 63L).map(i => (i, i + 1))
     val (labels, rounds) = cc(chain)
     labels.values.toSet shouldBe Set(0L)
     labels.keySet shouldBe (1L to 63L).toSet

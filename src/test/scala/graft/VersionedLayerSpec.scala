@@ -557,6 +557,29 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     VersionedLayer.read(spark, root, Some(v4)).count() shouldBe 40
   }
 
+  test("deleting repeated keys publishes the same snapshot as the distinct keys") {
+    // the delete path does not dedup its key set: the bounds agg, the
+    // left-semi discovery and the left-anti rewrite are all set-semantic
+    def snapshot(root: String): (Seq[(Int, String)], Int) =
+      (VersionedLayer.read(spark, root).as[(Int, String)].collect().toSeq.sorted,
+        VersionedLayer.dataFiles(spark, root,
+          VersionedLayer.latestVersion(spark, root).get).size)
+    val distinct = tmpRoot()
+    keyLocalLayer(distinct)
+    VersionedLayer.deleteKeys(Seq(12, 15, 19).toDF("k"), distinct, Seq("k"))
+    val want = snapshot(distinct)
+    want._1.map(_._1) shouldBe ((1 to 40).toSet -- Set(12, 15, 19)).toSeq.sorted
+    val repeated = tmpRoot()
+    keyLocalLayer(repeated)
+    VersionedLayer.deleteKeys(Seq(12, 12, 15, 19, 19).toDF("k"), repeated, Seq("k"))
+    snapshot(repeated) shouldBe want
+    val serializable = tmpRoot()
+    keyLocalLayer(serializable)
+    VersionedLayer.deleteKeysSerializable(
+      Seq(12, 12, 15, 19, 19).toDF("k"), serializable, Seq("k"))
+    snapshot(serializable) shouldBe want
+  }
+
   test("deleteKeys with a narrower-but-coercible key type (Int keys, Long-keyed table)") {
     // round-22 ADVICE fix: the delete path's bounds agg must aggregate the
     // key CAST to the table's k0 type — an Int-keyed frame against a
