@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * driver contract. */
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
-    // Scaling must time the real pipelines: the silver-layer caches
-    // (Dedup.sharedPairCounts / sharedMinhashCandidates) would otherwise
+    // Scaling must time the real pipelines: the session layers
+    // (SessionLayers: pair counts, candidates, models) would otherwise
     // turn every post-first rep into a checkpointed read and flatten the
     // growth curves this harness exists to expose.
     System.setProperty("graft.noEdgeCache", "1")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{QueryModule, SessionLayers}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -237,19 +237,16 @@ object Cluster extends QueryModule {
   }
 
   /** The resolved-entity label frame (node = p_partkey, cluster_id =
-    * component min) through the session model layer — the Dedup.shared*
-    * lifecycle: the complete fuzzy edge set plus its connected components is
-    * an ingest-cadence artifact (an MDM system publishes the resolved
-    * entity table; consumers join it), so the first caller per (session,
-    * dir) resolves and `localCheckpoint`s, and every q217-style rollup
-    * serves from the materialization. `-Dgraft.noEdgeCache=1` bypasses for
-    * ScaleCheck honesty. Membership is COMPLETE: each component's min
-    * member appears mapped to itself (the CC label table omits it — the
-    * q76 coalesce convention). */
-  private val entityLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  def sharedEntityLabels(s: SparkSession, dir: String): DataFrame = {
-    def fresh = {
+    * component min) through [[graft.SessionLayers]]: the complete fuzzy
+    * edge set plus its connected components is an ingest-cadence artifact
+    * (an MDM system publishes the resolved entity table; consumers join
+    * it), so the first caller per (session, dir) resolves and
+    * `localCheckpoint`s, and every q217-style rollup serves from the
+    * materialization. Membership is COMPLETE: each component's min member
+    * appears mapped to itself (the CC label table omits it — the q76
+    * coalesce convention). */
+  def sharedEntityLabels(s: SparkSession, dir: String): DataFrame =
+    SessionLayers.frame(s, "entityLabels", dir) {
       val parts = Tables.read(s, dir, "part")
         .select(col("p_partkey"), col("p_name"))
       val edges = Dedup.fuzzyPairsAllFrom(parts)
@@ -259,11 +256,6 @@ object Cluster extends QueryModule {
       nodes.join(connectedComponents(edges), Seq("node"), "left")
         .select(col("node"), coalesce(col("cluster_id"), col("node")).as("cluster_id"))
     }
-    if (sys.props.get("graft.noEdgeCache").contains("1")) return fresh
-    if (entityLabelCache.size > 4) entityLabelCache.clear()
-    entityLabelCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => fresh.localCheckpoint())
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -308,12 +300,12 @@ object Cluster extends QueryModule {
       val labeled = dedupClusters(s, dir)
         .select(col("doc_id"), col("cluster_id"), col("n_chars"),
           graft.operators.TextAnalytics.nTokens(col("text")).as("n_toks"))
-      val pre = labeled.agg(count(lit(1)).as("docs_pre"),
-        sum(col("n_toks")).as("toks_pre"), sum(col("n_chars")).as("chars_pre"))
-      val post = labeled.filter(col("doc_id") === col("cluster_id"))
-        .agg(count(lit(1)).as("docs_post"),
-          sum(col("n_toks")).as("toks_post"), sum(col("n_chars")).as("chars_post"))
-      pre.crossJoin(broadcast(post))
+      val survivor = col("doc_id") === col("cluster_id")
+      labeled.agg(count(lit(1)).as("docs_pre"),
+          sum(col("n_toks")).as("toks_pre"), sum(col("n_chars")).as("chars_pre"),
+          count(when(survivor, 1)).as("docs_post"),
+          sum(when(survivor, col("n_toks"))).as("toks_post"),
+          sum(when(survivor, col("n_chars"))).as("chars_post"))
         .select(col("docs_pre"), col("docs_post"),
           // empty-corpus guards: null rates, never an ANSI x/0 job abort
           when(col("docs_pre") > 0,

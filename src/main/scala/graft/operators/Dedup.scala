@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{QueryModule, SessionLayers}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,28 +180,11 @@ object Dedup extends QueryModule {
     * than a derived score is what lets BOTH resemblance (q35) and
     * containment (q89) share one materialization (Broder '97: both derive
     * from |A|, |B|, |A∩B|).
-    * Keyed on the Spark application id so a frame never leaks across
-    * sessions (checkpoint blocks die with their context); the map is
-    * cleared past a small bound so a long-lived multi-tenant session cannot
-    * pin unbounded block-manager memory. */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  /** `-Dgraft.noEdgeCache=1` disables the silver-layer memoization (both
-    * the pair-count and the LSH-candidate caches) so scaling harnesses
-    * (ScaleCheck) measure the real pipeline cost growth instead of a
-    * checkpointed read — Bench/Verify keep the cached (production-shaped)
-    * path. */
-  private def edgeCacheDisabled: Boolean =
-    sys.props.get("graft.noEdgeCache").contains("1")
-
+    * Held in [[graft.SessionLayers]], which keys, bounds and bypasses it. */
   def sharedPairCounts(s: SparkSession, dir: String,
-                       dfCap: Int = DefaultDfCap): DataFrame = {
-    if (edgeCacheDisabled) return sharedShinglePairCounts(docs(s, dir), dfCap)
-    if (pairCache.size > 4) pairCache.clear()
-    pairCache.computeIfAbsent((s.sparkContext.applicationId, dir, dfCap),
-      _ => sharedShinglePairCounts(docs(s, dir), dfCap).localCheckpoint())
-  }
+                       dfCap: Int = DefaultDfCap): DataFrame =
+    SessionLayers.frame(s, "shinglePairCounts", dir, dfCap)(
+      sharedShinglePairCounts(docs(s, dir), dfCap))
 
   def sharedNgramJaccardPairs(s: SparkSession, dir: String,
                               dfCap: Int = DefaultDfCap): DataFrame =
@@ -331,21 +314,14 @@ object Dedup extends QueryModule {
   }
 
   /** Session-materialized LSH candidate pairs — the CANDIDATE silver layer,
-    * same rationale and lifecycle as [[sharedPairCounts]]: q36's
-    * verification stage and q145's audit both consume the identical banded
-    * bucket-join output, and at production scale the candidate set is
-    * persisted once, not re-derived per consumer. First caller per
-    * (session, dir) materializes the narrow (id_a, id_b) frame via
-    * `localCheckpoint`; later callers read the materialized rows. */
-  private val candCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  def sharedMinhashCandidates(s: SparkSession, dir: String): DataFrame = {
-    if (edgeCacheDisabled) return minhashLshCandidates(s, dir)
-    if (candCache.size > 4) candCache.clear()
-    candCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => minhashLshCandidates(s, dir).localCheckpoint())
-  }
+    * same rationale and [[graft.SessionLayers]] lifecycle as
+    * [[sharedPairCounts]]: q36's verification stage and q145's audit both
+    * consume the identical banded bucket-join output, and at production
+    * scale the candidate set is persisted once, not re-derived per
+    * consumer. First caller per (session, dir) materializes the narrow
+    * (id_a, id_b) frame; later callers read the materialized rows. */
+  def sharedMinhashCandidates(s: SparkSession, dir: String): DataFrame =
+    SessionLayers.frame(s, "minhashCandidates", dir)(minhashLshCandidates(s, dir))
 
   def minhashLshPairs(s: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
     val docsDf = docs(s, dir)

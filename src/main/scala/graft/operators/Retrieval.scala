@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{QueryModule, SessionLayers}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -74,21 +74,13 @@ object Retrieval extends QueryModule {
 
   /** Session-materialized (doc_id, term, tf) inverted-index base — the
     * SILVER INDEX a production retrieval stack persists once and serves
-    * every ranking/intersection/similarity query from (same lifecycle and
-    * `-Dgraft.noEdgeCache=1` bypass as the Dedup pair-count and Similarity
-    * model layers). Five fixture queries (q78/q79/q80/q91/q92) consume the
-    * identical tokenize→group pipeline; only positional phrase search
-    * (q116) needs its own pass (positions don't survive the tf rollup). */
-  private val tfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  def sharedTermFreqs(s: SparkSession, dir: String): DataFrame = {
-    if (sys.props.get("graft.noEdgeCache").contains("1"))
-      return termFreqs(docs(s, dir))
-    if (tfCache.size > 4) tfCache.clear()
-    tfCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => termFreqs(docs(s, dir)).localCheckpoint())
-  }
+    * every ranking/intersection/similarity query from, held in
+    * [[graft.SessionLayers]]. Five fixture queries (q78/q79/q80/q91/q92)
+    * consume the identical tokenize→group pipeline; only positional phrase
+    * search (q116) needs its own pass (positions don't survive the tf
+    * rollup). */
+  def sharedTermFreqs(s: SparkSession, dir: String): DataFrame =
+    SessionLayers.frame(s, "termFreqs", dir)(termFreqs(docs(s, dir)))
 
   /** Top-`k` terms per document by TF-IDF (idf = ln(N/df)), with rank.
     * Scores are rounded before ranking; ties break on the term. */

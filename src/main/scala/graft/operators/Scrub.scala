@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{QueryModule, SessionLayers}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -143,19 +143,13 @@ object Scrub extends QueryModule {
     * kernel is an interpreted higher-order fold (md5 per 5-gram), the most
     * expensive row-local text op in the module — computing it once per
     * (session, dir) is exactly what a production pipeline does by
-    * persisting fingerprints next to the corpus. Same lifecycle/bypass
-    * contract as the other silver layers (`-Dgraft.noEdgeCache=1`). */
-  private val winnowCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  def sharedWinnowed(s: SparkSession, dir: String): DataFrame = {
-    def fresh = docs(s, dir)
-      .filter(TextAnalytics.nTokens(col("text")) >= 8)
-      .select(col("doc_id"), winnowed.as("fp"))
-    if (sys.props.get("graft.noEdgeCache").contains("1")) return fresh
-    if (winnowCache.size > 4) winnowCache.clear()
-    winnowCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => fresh.localCheckpoint())
-  }
+    * persisting fingerprints next to the corpus. Held in
+    * [[graft.SessionLayers]] like the other silver layers. */
+  def sharedWinnowed(s: SparkSession, dir: String): DataFrame =
+    SessionLayers.frame(s, "winnowFingerprints", dir)(
+      docs(s, dir)
+        .filter(TextAnalytics.nTokens(col("text")) >= 8)
+        .select(col("doc_id"), winnowed.as("fp")))
 
   /** Gopher-style duplicate-n-gram coverage (q103) — Rae et al., "Scaling
     * Language Models: ... Gopher" (2021) Table A1: the fraction of a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryModule
+import graft.{QueryModule, SessionLayers}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -128,22 +128,13 @@ object TextAnalytics extends QueryModule {
     scored
   }
 
-  private val nbCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** [[nbScoredFrom]] over the fixture corpus, session-materialized: the
     * trained-NB score frame is a MODEL ARTIFACT shared by q102 (argmax),
     * q209 (margin calibration) and q243 (method agreement) — training it
     * three times per session is the q40-retraining anti-pattern the
-    * round-12 verdict flagged. Same lifecycle/bypass contract as
-    * Retrieval.sharedTermFreqs (`-Dgraft.noEdgeCache=1` recomputes). */
-  def sharedNbScored(s: SparkSession, dir: String): DataFrame = {
-    if (sys.props.get("graft.noEdgeCache").contains("1"))
-      return nbScoredFrom(docs(s, dir))
-    if (nbCache.size > 4) nbCache.clear()
-    nbCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => nbScoredFrom(docs(s, dir)).localCheckpoint())
-  }
+    * round-12 verdict flagged. Held in [[graft.SessionLayers]]. */
+  def sharedNbScored(s: SparkSession, dir: String): DataFrame =
+    SessionLayers.frame(s, "nbScores", dir)(nbScoredFrom(docs(s, dir)))
 
   def nbLangIdFrom(d: DataFrame): DataFrame = nbLangIdScored(nbScoredFrom(d))
 

@@ -91,8 +91,10 @@ object VersionedLayer {
     * the commit path accumulates wall nanos per phase so a profiler main
     * can separate manifest IO, staging writes, footer reads, discovery
     * plan construction/execution and publish fs ops — the "driver
-    * choreography" between Spark jobs that QueryJobProfile measures only
-    * in aggregate. Zero overhead when unset (one static boolean test). */
+    * choreography" between Spark jobs that a per-query job trace
+    * (perfbench `--trace 1`) shows only in aggregate. `snapshotAndReset` is
+    * the read side; no main calls it today. Zero overhead when unset (one
+    * static boolean test). */
   private[graft] object CommitPhases {
     val enabled: Boolean = sys.env.contains("GRAFT_COMMIT_PHASES")
     private val acc =
