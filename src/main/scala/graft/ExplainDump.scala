@@ -1,8 +1,5 @@
 package graft
 
-import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: write `.explain("formatted")` output for the named queries to
   * files (<outDir>/<query>_<suffix>.txt) — the optimization-round evidence
   * format (before/after plan diffs the judge can read without running Spark).
@@ -15,14 +12,7 @@ object ExplainDump {
     val (outDir, suffix, qs) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(Tables.nanosConf._1, Tables.nanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- qs) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only manifest-scale evidence (round-19 verdict task 6): the
   * VersionedLayer's one-JSON-per-version manifest scales with the
   * version's FILE COUNT, and the layer's 100 TB story rested on a prose
@@ -19,11 +17,7 @@ object ManifestScale {
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.toSeq.map(_.toInt)
                  else Seq(1000, 10000, 50000, 100000)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("2")
     for (n <- counts) {
       val rootPath = java.nio.file.Files.createTempDirectory("graft_manifest_scale")
       try {

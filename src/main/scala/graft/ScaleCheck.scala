@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only scaling harness: times the document-dedup tier (q35 / q36 / q58)
   * across corpus sizes to separate contention noise from structural
   * (super-linear) cost growth — the check the round-6 advisor asked for on
@@ -20,15 +18,7 @@ object ScaleCheck {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // SPARK_GRAFT_SCALE_QUERIES=q35_ngram_jaccard,q76_dedup_clusters
     // narrows the sweep (e.g. the 8x linearity runs target the judge's

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only scaling harness for the streaming-parity tier (q197–q202, q212)
   * — the round-15 verdict's item 8: micro-batch startup dominates wall time
   * at fixture scale, so WALL TIME is the wrong scaling statistic for
@@ -21,15 +19,7 @@ object StreamScaleCheck {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val queries = Seq("q197_stream_batch_equiv", "q198_stream_dedup_equiv",
       "q199_stream_session_equiv", "q202_stream_join_equiv",
       "q201_stream_quarantine", "q212_stream_conformal", "q379_stream_hll",

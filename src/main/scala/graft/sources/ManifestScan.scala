@@ -33,10 +33,6 @@ import org.apache.spark.sql.types.StructType
   * would report, so join-strategy choices are unchanged. */
 private[sources] object ManifestScan {
 
-  /** Dev kill-switch for A/B measurement: -Dgraft.manifestScan=off reverts
-    * [[VersionedLayer.readFiles]] to the spark.read path route. */
-  def enabled: Boolean = !sys.props.get("graft.manifestScan").contains("off")
-
   private final class ManifestFileIndex(files: Array[FileStatus], root: Path)
       extends FileIndex {
     override def rootPaths: Seq[Path] = Seq(root)

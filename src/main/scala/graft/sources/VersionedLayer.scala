@@ -79,45 +79,14 @@ import org.apache.spark.sql.types._
   * the version's file count — MEASURED, not estimated ([[manifestProbe]] /
   * `graft.ManifestScale`, table in BASELINE.md): ~170 B/entry, 100k files →
   * ~17 MB manifest, ~113 ms write, ~132 ms read on this host — linear, and
-  * comfortably inside a commit budget to ~100k files per version. Bound
+  * comfortably inside a commit budget to ~100k files per version. Those
+  * figures predate the per-entry `bytes` field, which brings an entry to
+  * ~184 B (10k-entry probe); the latencies were not re-measured with it. Bound
   * file count operationally with [[compact]] (the same discipline Delta
   * needs before its parquet checkpoints); past that the successor is
   * Delta's checkpointed-log shape (same manifest content, columnar
   * container + incremental tail), not a different algorithm. */
 object VersionedLayer {
-
-  /** Dev-only phase accounting for the commit path (round-22 gap
-    * attribution): when GRAFT_COMMIT_PHASES is set in the environment,
-    * the commit path accumulates wall nanos per phase so a profiler main
-    * can separate manifest IO, staging writes, footer reads, discovery
-    * plan construction/execution and publish fs ops — the "driver
-    * choreography" between Spark jobs that a per-query job trace
-    * (perfbench `--trace 1`) shows only in aggregate. `snapshotAndReset` is
-    * the read side; no main calls it today. Zero overhead when unset (one
-    * static boolean test). */
-  private[graft] object CommitPhases {
-    val enabled: Boolean = sys.env.contains("GRAFT_COMMIT_PHASES")
-    private val acc =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    @inline def timed[T](phase: String)(body: => T): T =
-      if (!enabled) body
-      else {
-        val t0 = System.nanoTime()
-        try body
-        finally acc.computeIfAbsent(phase,
-          _ => new java.util.concurrent.atomic.LongAdder).add(System.nanoTime() - t0)
-      }
-    /** (phase -> seconds) accumulated since the last call, then reset. */
-    def snapshotAndReset(): Seq[(String, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      val it = acc.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        out += e.getKey -> e.getValue.sumThenReset() / 1e9
-      }
-      out.sortBy(-_._2).toSeq
-    }
-  }
 
   /** Per-file manifest entry: the data file's root-relative path, its row
     * count, and min/max stats for `statsCols` (values serialized through a
@@ -136,12 +105,11 @@ object VersionedLayer {
     *
     * `bytes` is the file's exact on-disk length, recorded at staging time —
     * what lets [[readFiles]] build the scan from the manifest alone with
-    * zero filesystem listing ([[ManifestScan]]); 0 (a manifest written
-    * before round 22) falls back to the listing read path. */
+    * zero filesystem listing ([[ManifestScan]]). Always positive: the
+    * reader refuses a manifest entry without it. */
   case class FileMeta(path: String, rows: Long, statsCols: Seq[String],
                       mins: Map[String, String], maxs: Map[String, String],
-                      partition: Map[String, String] = Map.empty,
-                      bytes: Long = 0L)
+                      partition: Map[String, String], bytes: Long)
 
   private case class Manifest(schema: StructType, files: Seq[FileMeta],
                               layout: Seq[String] = Nil)
@@ -197,8 +165,7 @@ object VersionedLayer {
 
   /** Committed versions in ascending order — the publication log. */
   def committedVersions(spark: SparkSession, root: String): Seq[Long] =
-    CommitPhases.timed("log.listCommits")(
-      listVersionFiles(fs(spark, root), commitDir(root)))
+    listVersionFiles(fs(spark, root), commitDir(root))
 
   /** Currently published version, if any write ever committed. */
   def latestVersion(spark: SparkSession, root: String): Option[Long] =
@@ -223,7 +190,7 @@ object VersionedLayer {
       val n = arr.addObject()
       n.put("path", e.path)
       n.put("rows", e.rows)
-      if (e.bytes > 0L) n.put("bytes", e.bytes)
+      n.put("bytes", e.bytes)
       val sc = n.putArray("statsCols")
       e.statsCols.foreach(sc.add)
       val mn = n.putObject("min")
@@ -240,7 +207,10 @@ object VersionedLayer {
     finally out.close()
   }
 
-  private def readManifest(spark: SparkSession, root: String, version: Long): Manifest = CommitPhases.timed("manifest.read") {
+  /** Parse version `version`'s manifest. An entry without a positive `bytes`
+    * length is refused: split planning skips a zero-length file, so the
+    * scan would silently return too few rows. */
+  private def readManifest(spark: SparkSession, root: String, version: Long): Manifest = {
     val f = fs(spark, root)
     val in = f.open(new Path(manifestDir(root), version.toString))
     val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
@@ -254,10 +224,14 @@ object VersionedLayer {
         case None => Map.empty
         case Some(obj) => obj.fieldNames().asScala.map(k => k -> obj.get(k).asText).toMap
       }
-      FileMeta(n.get("path").asText, n.get("rows").asLong,
+      val path = n.get("path").asText
+      val bytes = Option(n.get("bytes")).map(_.asLong).getOrElse(0L)
+      if (bytes <= 0L)
+        throw new IllegalStateException(
+          s"manifest $version under $root lists $path without a positive byte length")
+      FileMeta(path, n.get("rows").asLong,
         n.get("statsCols").elements().asScala.map(_.asText).toSeq,
-        strMap("min"), strMap("max"), strMap("partition"),
-        Option(n.get("bytes")).map(_.asLong).getOrElse(0L))
+        strMap("min"), strMap("max"), strMap("partition"), bytes)
     }.toSeq
     Manifest(schema, files, layout)
   }
@@ -372,17 +346,15 @@ object VersionedLayer {
           s"'$HiveNullPartition' values, which hive path encoding conflates with null")
     }
     val pool = new Path(dataDir(root), UUID.randomUUID().toString)
-    CommitPhases.timed("stage.write") {
-      if (layout.isEmpty) df.write.mode("overwrite").parquet(pool.toString)
-      else df.write.mode("overwrite").partitionBy(layout: _*).parquet(pool.toString)
-    }
+    if (layout.isEmpty) df.write.mode("overwrite").parquet(pool.toString)
+    else df.write.mode("overwrite").partitionBy(layout: _*).parquet(pool.toString)
     val f = fs(spark, root)
     val rootAbs = absRoot(spark, root)
     val statsFields = df.schema.fields.toSeq
       .filter(fd => !layout.contains(fd.name) && isStatsType(fd.dataType))
       .take(MaxStatsCols)
     val poolAbs = f.makeQualified(pool).toUri.getPath
-    val parts = CommitPhases.timed("stage.listPool")(listFilesRec(f, pool))
+    val parts = listFilesRec(f, pool)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(st => st.getPath.toUri.getPath)
     // footer reads are independent driver-side IO — parallelize on a
@@ -390,7 +362,7 @@ object VersionedLayer {
     // write) doesn't serialize hundreds of thousands of metadata reads
     val exec = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(16, parts.size)))
-    val entries = CommitPhases.timed("stage.footerStats") { try {
+    val entries = try {
       val futs = parts.map { st =>
         exec.submit(new java.util.concurrent.Callable[Option[FileMeta]] {
           def call(): Option[FileMeta] = {
@@ -400,6 +372,7 @@ object VersionedLayer {
               val fileAbs = st.getPath.toUri.getPath
               require(fileAbs.startsWith(poolAbs + "/"),
                 s"staged file $fileAbs escapes pool $poolAbs")
+              require(st.getLen > 0L, s"staged file $fileAbs has no length")
               val part =
                 if (layout.isEmpty) Map.empty[String, String]
                 else partitionOfPath(fileAbs.drop(poolAbs.length + 1), layout)
@@ -428,7 +401,7 @@ object VersionedLayer {
             throw Option(e.getCause).getOrElse(e)
         }
       }
-    } finally exec.shutdownNow() } // on failure, cancel in-flight reads too
+    } finally exec.shutdownNow() // on failure, cancel in-flight reads too
     (entries, pool)
   }
 
@@ -548,21 +521,17 @@ object VersionedLayer {
     * manifests (some files layouted, some not — never produced today, but
     * representable) read correctly by grouping.
     *
-    * Since round 22 each branch is served by [[ManifestScan]] when every
-    * entry carries its staged length: the scan plans from the manifest
-    * alone — no per-file status fetch, no listing Spark job past the
-    * parallel-discovery threshold (the per-commit/per-read fs round-trips
-    * the round-21 verdict flagged; at 100k-file versions the listing job
-    * this avoids is a full cluster round trip per snapshot resolution).
-    * Entries without lengths (pre-round-22 manifests) keep the path route. */
+    * Each branch is served by [[ManifestScan]] from the entries' staged
+    * lengths: the scan plans from the manifest alone — no per-file status
+    * fetch, no listing Spark job past the parallel-discovery threshold (at
+    * 100k-file versions that listing job is a full cluster round trip per
+    * snapshot resolution). */
   private def readFiles(spark: SparkSession, root: String, schema: StructType,
-                        files: Seq[FileMeta]): DataFrame = CommitPhases.timed("readFiles.build") {
+                        files: Seq[FileMeta]): DataFrame = {
     val rootQ = fs(spark, root).makeQualified(new Path(root))
     def branch(es: Seq[FileMeta], dataSchema: StructType): DataFrame =
-      if (ManifestScan.enabled && es.forall(_.bytes > 0L))
-        ManifestScan.scan(spark, rootQ,
-          es.map(e => (new Path(rootQ, e.path), e.bytes)), dataSchema)
-      else spark.read.schema(dataSchema).parquet(es.map(e => s"$root/${e.path}"): _*)
+      ManifestScan.scan(spark, rootQ,
+        es.map(e => (new Path(rootQ, e.path), e.bytes)), dataSchema)
     if (files.isEmpty) emptyDf(spark, schema)
     else if (files.forall(_.partition.isEmpty)) branch(files, schema)
     else {
@@ -589,7 +558,7 @@ object VersionedLayer {
     * the commit must land exactly at base+1 or not at all, so a lost CAS
     * returns None and the caller re-derives from the advanced base. */
   private def publish(spark: SparkSession, root: String, man: Manifest,
-                      pinned: Option[Long]): Option[Long] = CommitPhases.timed("publish") {
+                      pinned: Option[Long]): Option[Long] = {
     val f = fs(spark, root)
     val staged = new Path(root, s"_staged-${UUID.randomUUID()}")
     writeManifestFile(f, staged, man)
@@ -660,10 +629,8 @@ object VersionedLayer {
     * append (the nightly CDC case) paid a key-column scan of EVERY base
     * file instead of pruning all of them from stats — the fixture-scale
     * per-commit residual the round-19 audit isolated in the
-    * q389/q391/q392/q396 closes. Overridable via
-    * -Dgraft.mergeEnvelopeMinFiles (tests pin both paths). */
-  private def envelopeMinFiles: Int =
-    sys.props.get("graft.mergeEnvelopeMinFiles").map(_.toInt).getOrElse(2)
+    * q389/q391/q392/q396 closes. */
+  private val EnvelopeMinFiles = 2
 
   /** The delta's first-key envelope for the stats prune, as CATALYST-internal
     * values of the key's type. `BoundsUnknown` = could not be derived without
@@ -721,7 +688,7 @@ object VersionedLayer {
 
   /** Which base files can contain a key present in `delta` — the file-prune
     * core. Two phases, both delta-bounded:
-    *   1. stats prune (engaged above [[envelopeMinFiles]] stats-bearing
+    *   1. stats prune (engaged from [[EnvelopeMinFiles]] stats-bearing
     *      files): per-file [min,max] of the FIRST key column against the
     *      delta's key envelope. The envelope arrives job-free from the
     *      staged delta's own footers where the caller could derive it
@@ -752,7 +719,7 @@ object VersionedLayer {
     val _ = allNullKey // null keys never equi-match: those files are never touched
     val rangeCandidates: Seq[FileMeta] =
       if (ranged.isEmpty) Seq.empty
-      else if (ranged.size < envelopeMinFiles) ranged // discovery opens them all
+      else if (ranged.size < EnvelopeMinFiles) ranged // discovery opens them all
       else {
         val bounds: Option[(Any, Any)] = deltaBounds match {
           case BoundsRange(lo, hi) => Some((lo, hi))
@@ -765,10 +732,8 @@ object VersionedLayer {
             // — an identity pass-through for primitives — the wrong box, and
             // statsOrdering(k0Type) would throw ClassCastException where the
             // old in-plan formulation coerced fine (round-21 ADVICE item).
-            val r = CommitPhases.timed("discovery.boundsAgg") {
-              delta.select(col(k0).cast(k0Type).as(k0))
-                .agg(min(col(k0)).as("__dlo"), max(col(k0)).as("__dhi")).head()
-            }
+            val r = delta.select(col(k0).cast(k0Type).as(k0))
+              .agg(min(col(k0)).as("__dlo"), max(col(k0)).as("__dhi")).head()
             if (r.isNullAt(0)) None // all-null delta keys never equi-match
             else {
               val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -806,12 +771,11 @@ object VersionedLayer {
       // that a driver-side toSet dedups for free. mapPartitions keeps the
       // collected payload bounded by files-per-partition, never rows.
       import spark.implicits._
-      CommitPhases.timed("discovery.exec") {
-        scan.join(deltaKeys, keyCols, "left_semi")
-          .select(col("__graft_file")).as[String]
-          .mapPartitions(it => it.toSet.iterator)
-          .collect()
-      }.map(relativize(_, rootAbs)).toSet
+      scan.join(deltaKeys, keyCols, "left_semi")
+        .select(col("__graft_file")).as[String]
+        .mapPartitions(it => it.toSet.iterator)
+        .collect()
+        .map(relativize(_, rootAbs)).toSet
     }
   }
 
@@ -1328,7 +1292,8 @@ object VersionedLayer {
     * driver-side JSON scaling with its file count. Write ≈ the commit
     * path's stage step (publish adds two namespace ops); read ≈ every
     * snapshot resolution. Entries mimic a key-sorted index layout
-    * (disjoint 8-byte-key ranges over one stats column). */
+    * (disjoint 8-byte-key ranges over one stats column, 4 MiB files), with
+    * every field a staged entry carries. */
   private[graft] def manifestProbe(spark: SparkSession, root: String,
                                    files: Int): (Long, Long, Long) = {
     val f = fs(spark, root)
@@ -1339,7 +1304,8 @@ object VersionedLayer {
       FileMeta(f"_data/00000000-0000-0000-0000-000000000000/part-$i%05d.parquet",
         100000L, Seq("doc_id"),
         Map("doc_id" -> (i * 100000L).toString),
-        Map("doc_id" -> ((i + 1) * 100000L - 1).toString))
+        Map("doc_id" -> ((i + 1) * 100000L - 1).toString),
+        Map.empty, 4L * 1024 * 1024)
     }
     val p = new Path(manifestDir(root), "1")
     if (f.exists(p)) f.delete(p, false)

@@ -88,9 +88,8 @@ object StreamParity extends QueryModule {
     * query in one session; a reused name would collide). */
   private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The q379 streaming aggregation (per-hour HLL registers) — extracted so
-    * [[graft.StreamProfile]] can time/instrument the stream leg alone. */
-  private[graft] def hllHourlyRegisters(s: SparkSession, dir: String): DataFrame = {
+  /** The q379 streaming aggregation (per-hour HLL registers). */
+  private def hllHourlyRegisters(s: SparkSession, dir: String): DataFrame = {
     // (Measured, not assumed: the single-file source scans as ONE partition,
     // but fanning it out with a pre-hash repartition(32) made BOTH queries
     // SLOWER — the extra exchange costs more than the single-core hash pass
@@ -108,9 +107,8 @@ object StreamParity extends QueryModule {
         col("bucket"), col("m_j"))
   }
 
-  /** The q384 streaming aggregation (per-hour 4×256 CMS cells) — extracted
-    * for the same [[graft.StreamProfile]] instrumentation hook. */
-  private[graft] def cmsHourlyCells(s: SparkSession, dir: String): DataFrame = {
+  /** The q384 streaming aggregation (per-hour 4×256 CMS cells). */
+  private def cmsHourlyCells(s: SparkSession, dir: String): DataFrame = {
     def h(i: Int) =
       s"cast(conv(substring(md5(concat('scms$i:', cast(user_id as string))), 1, 8), 16, 10) as bigint) % 256"
     val ev = readEventsStream(s, dir)

@@ -8,16 +8,7 @@ import org.apache.spark.sql.SparkSession
   * stop it). Mirrors the driver harness config: UTC, few shuffle partitions. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(graft.sources.Tables.nanosConf._1, graft.sources.Tables.nanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-tests")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local("4", appName = Some("graft-tests"))
     // "No Partition Defined for Window operation!": every single-partition
     // window is pinned to AuditSpec's allowlist, so the warning is noise here
     Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)

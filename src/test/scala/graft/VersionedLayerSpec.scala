@@ -361,37 +361,28 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("the stats envelope path (forced) prunes identically to discovery") {
-    // The envelope now runs by default from 2 stats-bearing files up (a
-    // pure append should touch zero files at ANY count); force the
-    // threshold to 1 so this test pins the envelope path even for a
-    // single-file base, with the same file-level outcomes as the
-    // discovery tests.
-    val prev = System.getProperty("graft.mergeEnvelopeMinFiles")
-    System.setProperty("graft.mergeEnvelopeMinFiles", "1")
-    try {
-      val root = tmpRoot()
-      keyLocalLayer(root)
-      val v4 = VersionedLayer.latestVersion(spark, root).get
-      val before = VersionedLayer.fileEntries(spark, root, v4)
-      // pure append: the envelope alone excludes every file — zero rewrites
-      val v5 = VersionedLayer.merge(
-        (41 to 50).map(i => (i, s"v$i")).toDF("k", "s").coalesce(1), root, Seq("k"))
-      val after5 = VersionedLayer.dataFiles(spark, root, v5)
-      before.map(_.path).foreach(p => after5 should contain(p))
-      // key-local update: envelope narrows to the [11,20] file, discovery confirms
-      val hot = before.filter(_.mins("k") == "11").map(_.path).head
-      val v6 = VersionedLayer.merge(
-        Seq((15, "UP")).toDF("k", "s"), root, Seq("k"))
-      val after6 = VersionedLayer.dataFiles(spark, root, v6)
-      after6 should not contain hot
-      (before.map(_.path).toSet - hot).foreach(p => after6 should contain(p))
-      VersionedLayer.read(spark, root).count() shouldBe 50
-      VersionedLayer.read(spark, root).filter("k = 15").head().getString(1) shouldBe "UP"
-    } finally {
-      if (prev == null) System.clearProperty("graft.mergeEnvelopeMinFiles")
-      else System.setProperty("graft.mergeEnvelopeMinFiles", prev)
-    }
+  test("the stats envelope path prunes identically to discovery") {
+    // The envelope runs from 2 stats-bearing files up (a pure append should
+    // touch zero files at ANY count); keyLocalLayer's 4 files take it, with
+    // the same file-level outcomes as the discovery tests.
+    val root = tmpRoot()
+    keyLocalLayer(root)
+    val v4 = VersionedLayer.latestVersion(spark, root).get
+    val before = VersionedLayer.fileEntries(spark, root, v4)
+    // pure append: the envelope alone excludes every file — zero rewrites
+    val v5 = VersionedLayer.merge(
+      (41 to 50).map(i => (i, s"v$i")).toDF("k", "s").coalesce(1), root, Seq("k"))
+    val after5 = VersionedLayer.dataFiles(spark, root, v5)
+    before.map(_.path).foreach(p => after5 should contain(p))
+    // key-local update: envelope narrows to the [11,20] file, discovery confirms
+    val hot = before.filter(_.mins("k") == "11").map(_.path).head
+    val v6 = VersionedLayer.merge(
+      Seq((15, "UP")).toDF("k", "s"), root, Seq("k"))
+    val after6 = VersionedLayer.dataFiles(spark, root, v6)
+    after6 should not contain hot
+    (before.map(_.path).toSet - hot).foreach(p => after6 should contain(p))
+    VersionedLayer.read(spark, root).count() shouldBe 50
+    VersionedLayer.read(spark, root).filter("k = 15").head().getString(1) shouldBe "UP"
   }
 
   test("layoutBy: hive-partitioned write round-trips; a single-band probe reads one partition's files only") {
@@ -771,28 +762,44 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     VersionedLayer.read(spark, root).filter("k = 'b3'").head().getString(1) shouldBe "UP"
   }
 
+  test("a manifest entry without a file length is refused, naming the file") {
+    // a zero or missing length would make split planning drop the file and
+    // the read return too few rows; the reader fails loudly instead
+    val root = tmpRoot()
+    VersionedLayer.write(Seq((1, "a"), (2, "b")).toDF("k", "s"), root)
+    val path = VersionedLayer.dataFiles(spark, root, 1L).head
+    val manifest = java.nio.file.Paths.get(root, "_manifests", "1")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = om.readTree(Files.readAllBytes(manifest))
+    node.get("files").elements().forEachRemaining(e =>
+      e.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("bytes"))
+    Files.write(manifest, om.writeValueAsBytes(node))
+    Files.delete(manifest.resolveSibling(".1.crc")) // stale after the rewrite
+    val e = intercept[IllegalStateException](VersionedLayer.read(spark, root).collect())
+    e.getMessage should include(path)
+  }
+
   test("manifest-served scan: identical rows to the listing route, no listing job") {
-    // Round-22: readFiles plans the snapshot scan from the manifest's
-    // recorded file lengths (ManifestScan) instead of re-listing every
-    // path through spark.read — the table-format argument (guide §6). Two
-    // pins: (a) EQUIVALENCE — the manifest-served read returns exactly the
-    // rows the listing route returns, over a version whose file count
-    // (>32) crosses spark.sql.sources.parallelPartitionDiscovery.threshold;
+    // readFiles plans the snapshot scan from the manifest's recorded file
+    // lengths (ManifestScan) instead of re-listing every path through
+    // spark.read — the table-format argument (guide §6). Two pins:
+    // (a) EQUIVALENCE — the manifest-served read returns exactly the rows a
+    // listing read of the same files returns, over a version whose file
+    // count (>32) crosses spark.sql.sources.parallelPartitionDiscovery.threshold;
     // (b) NO LISTING JOB — collecting the manifest-served snapshot fires
     // exactly one Spark job (the collect itself), where the listing route
     // fires a "listing leaf files" job first at this file count.
     val root = tmpRoot()
-    VersionedLayer.write((1 to 4000).map(i => (i.toLong, s"v$i")).toDF("k", "s")
-      .repartition(40), root)
-    VersionedLayer.fileEntries(spark, root, 1L).size should be > 32
+    val df = (1 to 4000).map(i => (i.toLong, s"v$i")).toDF("k", "s")
+    VersionedLayer.write(df.repartition(40), root)
+    val entries = VersionedLayer.fileEntries(spark, root, 1L)
+    entries.size should be > 32
     // every staged entry carries its on-disk length
-    VersionedLayer.fileEntries(spark, root, 1L).foreach(_.bytes should be > 0L)
-    def rows(): Array[(Long, String)] =
-      VersionedLayer.read(spark, root).collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    val served = rows()
-    System.setProperty("graft.manifestScan", "off")
-    val listed = try rows() finally System.clearProperty("graft.manifestScan")
+    entries.foreach(_.bytes should be > 0L)
+    def sorted(d: org.apache.spark.sql.DataFrame): Array[(Long, String)] =
+      d.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    val served = sorted(VersionedLayer.read(spark, root))
+    val listed = sorted(spark.read.schema(df.schema).parquet(entries.map(e => s"$root/${e.path}"): _*))
     served shouldBe listed
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
