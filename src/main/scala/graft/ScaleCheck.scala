@@ -36,7 +36,7 @@ object ScaleCheck {
       // replicated with per-copy component nudges by make_scale_corpora.py
       // (cross-copy cosines just under 1, so cells/bands densify); the
       // noEdgeCache flag above also bypasses the session model layer, so
-      // Lloyd's/PQ training cost is timed, not cached
+      // the seeded PQ codes build is timed, not cached
       "q47_embedding_neardup", "q99_semantic_dedup", "q108_pq_adc",
       "q214_semantic_decontam",
       // spectral/geometry tier (round-15 extension): the one-pass Gram

@@ -59,10 +59,10 @@ object SparkEntry {
     * accuracy is additionally ScalaTest-pinned (q150 remains q53's fully
     * exact twin). Every remaining oracle on the surface replays the full
     * computation. Every ANN tier is oracled directly: q39's md5-plane
-    * LSH replays in DuckDB verbatim, and q40/q108 register their SEEDED,
-    * SQL-replayable quantizer variants as the primary oracled paths while
-    * the Lloyd's-trained variants are served from the session model layer
-    * and recall-gated in DedupSimilaritySpec. */
+    * LSH replays in DuckDB verbatim, and q40/q108 run SEEDED,
+    * SQL-replayable quantizers (lowest-id centroids and codebooks, rounded
+    * assignment) that DuckDB replays step for step; their recall is
+    * additionally gated in DedupSimilaritySpec. */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracles).toMap
 }

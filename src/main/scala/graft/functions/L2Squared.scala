@@ -7,14 +7,13 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd squared L2 distance over two double-array columns — the
-  * k-means / IVF assignment kernel (see [[graft.operators.Similarity]]).
+  * k-means / PQ assignment kernel (see [[graft.operators.Similarity]]).
   *
   * Why native and not the `zip_with`+`aggregate` HOF form: the quantizer
   * evaluates this once per (row, centroid), and the HOF form pays per-element
   * interpreted lambda dispatch AND blows the expression tree up to
-  * k × dim inlined literal nodes — at k=8, dim=64 that tree made every
-  * training iteration spend ~10 s in analysis/codegen alone before touching
-  * a row. As a binary expression the centroid argument constant-folds to a
+  * k × dim inlined literal nodes — at k=8, dim=64 that tree spent ~10 s
+  * in analysis/codegen per assignment pass before touching a row. As a binary expression the centroid argument constant-folds to a
   * single array literal and the loop compiles tight.
   *
   * Semantics match [[VectorFunctions.distSq]] operation-for-operation — a

@@ -459,7 +459,7 @@ object Retrieval extends QueryModule {
     // query. PRF is the standard zero-supervision recall booster: documents
     // about the topic that happen not to contain the literal query terms
     // enter through the expansion vocabulary. The chosen expansion terms
-    // are a 3-term bounded model fetch (the trainCentroids contract) and
+    // are a 3-term bounded model fetch (never a corpus-sized collect) and
     // are pinned into every output row, so the oracle hash-gates WHAT was
     // expanded, not just the final ranking; `in_first_pass` marks which
     // final-top-10 docs the original query alone would have found. */

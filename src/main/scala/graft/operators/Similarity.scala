@@ -12,9 +12,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Similarity search over the `embeddings` table (`ArrayType(FloatType)`,
   * 64-dim), the standard ANN ladder — random-hyperplane LSH (Charikar 2002)
-  * and IVF-style coarse quantization with inverted lists (Jégou et al.,
-  * "Product quantization for nearest neighbor search", 2011 — the coarse
-  * stage only; no PQ codes needed at this dimensionality):
+  * and IVF coarse quantization with inverted lists plus PQ codes (Jégou et
+  * al., "Product quantization for nearest neighbor search", 2011):
   *
   *  1. brute-force cosine top-k — the exact baseline: broadcast the (small)
   *     query set against the corpus, one pass, per-partition top-k;
@@ -22,8 +21,11 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *     each probe only scans its bucket (the scale path: bucket count grows
   *     with 2^bits, candidate lists stay small and the join is a plain
   *     equi-join on the signature);
-  *  3. IVF ANN — a Lloyd's-trained coarse quantizer buckets the corpus into
-  *     inverted lists; a probe scans only its nearest centroid's list.
+  *  3. IVF/PQ ANN — a SEEDED quantizer (the lowest-id vectors are the
+  *     centroids and codebooks, every assignment rounded with deterministic
+  *     tiebreaks, so DuckDB replays each step) buckets the corpus into
+  *     inverted lists and encodes it as PQ codes; a probe scans only its
+  *     own cell, and ADC shortlists are re-ranked exactly.
   *
   * Vector math uses the engine's codegen'd [[graft.functions.CosineSimilarity]]
   * expression when the session has GraftExtensions installed (Verify/Bench
@@ -37,29 +39,19 @@ object Similarity extends QueryModule {
     Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
 
-  // ---- session-materialized ANN model layer ------------------------------
-  //
-  // A trained quantizer is a SILVER ARTIFACT, not per-query work: at 100 TB
-  // you train the IVF coarse quantizer / PQ codebooks once (on a sample),
-  // persist them, and every probe reuses the trained model — retraining
-  // inside the timed query is the anti-pattern the round-12 verdict flagged
-  // (q40 spent 4-8 s/invocation re-running Lloyd's). The models go through
-  // [[graft.SessionLayers]]: the first caller per (session, dir, params)
-  // trains and the k×dim centroid table (a few KB — it folds into plan
-  // literals anyway) is held in-process; on a cluster this is the model row
-  // a metadata store holds. Training is DETERMINISTIC (seeded, content-hash
-  // sampled), so cached-vs-fresh results are identical — asserted in
-  // DedupSimilaritySpec.
+  private def litArr(a: Array[Double]): Column =
+    array(scala.collection.immutable.ArraySeq.unsafeWrapArray(a.map(lit(_))): _*)
 
-  /** [[trainCentroids]] through the session model layer (see above). */
-  def sharedCentroids(s: SparkSession, dir: String, kCells: Int, iters: Int): Array[Array[Double]] =
-    SessionLayers.value(s, "ivfCentroids", dir, kCells, iters)(
-      trainCentroids(emb(s, dir), kCells, iters))
-
-  /** [[trainPqCodebooks]] through the session model layer (see above). */
-  def sharedPqBooks(s: SparkSession, dir: String, m: Int, ks: Int, iters: Int): Array[Array[Array[Double]]] =
-    SessionLayers.value(s, "pqCodebooks", dir, m, ks, iters)(
-      trainPqCodebooks(emb(s, dir), m, ks, iters))
+  /** The top-`k` rows per `q_id` of a scored `(q_id, n_id, metric)` frame,
+    * best `metric` first (`desc` for a similarity, ascending for a
+    * distance) with ties to the lower `n_id`: `(q_id, rn, n_id, metric)`. */
+  private def topK(scored: DataFrame, k: Int, metric: String, desc: Boolean): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(if (desc) col(metric).desc else col(metric), col("n_id"))
+    scored.withColumn("rn", row_number().over(w).cast(LongType))
+      .filter(col("rn") <= k)
+      .select(col("q_id"), col("rn"), col("n_id"), col(metric))
+  }
 
   /** Deterministic pseudo-random hyperplanes: component j of plane i derives
     * from md5(i:j), mapped to [-1, 1). Computed driver-side once (a constant
@@ -76,8 +68,7 @@ object Similarity extends QueryModule {
   /** Sign-bit LSH signature of vector column `v` against `planes`. */
   def lshSignature(v: Column, planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      val planeLit = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(p.map(lit)): _*)
-      when(dot(v, planeLit) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
+      when(dot(v, litArr(p)) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
   /** Banded sign-bit values: planes are grouped `rowsPerBand` at a time and
@@ -91,9 +82,7 @@ object Similarity extends QueryModule {
     require(planes.length % rowsPerBand == 0, "planes must divide into whole bands")
     array((0 until planes.length / rowsPerBand).map { b =>
       (0 until rowsPerBand).map { i =>
-        val p = planes(b * rowsPerBand + i)
-        val planeLit = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(p.map(lit)): _*)
-        when(dot(v, planeLit) >= 0, lit(1L << i)).otherwise(lit(0L))
+        when(dot(v, litArr(planes(b * rowsPerBand + i))) >= 0, lit(1L << i)).otherwise(lit(0L))
       }.reduce(_ + _)
     }: _*)
   }
@@ -115,13 +104,9 @@ object Similarity extends QueryModule {
   def cosineTopK(queriesDf: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val sp = queriesDf.sparkSession
     val q = broadcast(queriesDf.select(col("vec_id").as("q_id"), col("v").as("qv")))
-    val scored = q.join(corpus, col("vec_id") =!= col("q_id"))
+    topK(q.join(corpus, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(cosineFast(sp, col("qv"), col("v")), 6).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("sim"))
+        round(cosineFast(sp, col("qv"), col("v")), 6).as("sim")), k, "sim", desc = true)
   }
 
   /** ANN via hyperplane LSH: bucket corpus by signature, probe each query's
@@ -150,108 +135,18 @@ object Similarity extends QueryModule {
       e.filter(queryPred)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           explode(probes).as("qsig")))
-    val scored = q.join(e, col("sig") === col("qsig") && col("vec_id") =!= col("q_id"))
+    topK(q.join(e, col("sig") === col("qsig") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(cosineFast(s, col("qv"), col("v")), 6).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("sim"))
+        round(cosineFast(s, col("qv"), col("v")), 6).as("sim")), k, "sim", desc = true)
   }
 
-  /** Nearest-centroid cell id (0-based) of vector column `v` against the
-    * centroid literals — per-row map work only, no join, no shuffle; ties
-    * break to the lowest cell id (`array_position` finds the FIRST minimum).
-    * The distance kernel is the native `graft_l2sq` expression when the
-    * session has GraftExtensions (each centroid constant-folds to one array
-    * literal and the loop codegens tight — the HOF form's k×dim inlined
-    * lambda tree cost ~10 s of analysis/codegen PER training iteration),
-    * falling back to the bit-identical HOF fold. The input column is
-    * let-bound as a lambda variable (the 1-element `transform` trick) so an
-    * expensive `v` — e.g. the float→double cast transform — evaluates once,
-    * not once per centroid. */
-  def cellOf(s: SparkSession, v: Column, cents: Array[Array[Double]]): Column = {
-    def centLit(c: Array[Double]): Column =
-      array(scala.collection.immutable.ArraySeq.unsafeWrapArray(c.map(lit)): _*)
-    def argmin(vv: Column): Column = {
-      val ds = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        cents.map(c => distSqFast(s, vv, centLit(c)))): _*)
-      (array_position(ds, array_min(ds)) - 1).cast("int")
-    }
-    element_at(transform(array(v), vv => argmin(vv)), 1)
-  }
-
-  /** Lloyd's k-means for the IVF coarse quantizer, the shape that scales:
-    * each iteration is ONE pass over the training set — assignment is
-    * per-row array math against the current centroids (compiled into the
-    * plan as literals, the moral equivalent of a broadcast), and the update
-    * reduces to k×dim component sums with map-side partial aggregation.
-    * Only the k×dim centroid table ever reaches the driver (the standard
-    * k-means driver loop — MLlib's own KMeans iterates the same way).
-    *
-    * `trainFrac` < 1 trains the quantizer on a deterministic md5-hash
-    * sample of the corpus — the published IVF practice (the coarse
-    * quantizer needs a representative sample, not every vector; at 100 TB
-    * you train on ~1e6 vectors and ASSIGN everything).
-    *
-    * Deterministic: seeds are the k lowest-`vec_id` vectors, the training
-    * sample is content-hashed (not `rand()`), assignment ties break to the
-    * lowest cell, and the folds are sequential. Squared-L2 assignment +
-    * mean update is the classic Lloyd's pair, so each iteration's total
-    * quantization cost is non-increasing (asserted in DedupSimilaritySpec).
-    * Empty cells keep their previous centroid. */
-  def trainCentroids(corpus: DataFrame, k: Int = 8, iters: Int = 3,
-                     trainFrac: Double = 1.0): Array[Array[Double]] = {
-    val s = corpus.sparkSession
-    val training =
-      if (trainFrac >= 1.0) corpus
-      else corpus.filter(
-        expr("cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) AS bigint)")
-          .cast("double") / lit(4294967296.0) < trainFrac)
-    var cents: Array[Array[Double]] = training.orderBy(col("vec_id")).limit(k)
-      .select(col("v")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(cents.length == k, s"training set has fewer than $k vectors")
-    for (_ <- 1 to iters) {
-      val means = training.select(cellOf(s, col("v"), cents).as("cell"), posexplode(col("v")))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("col")).as("m"))
-        .collect().groupBy(_.getInt(0))
-        .map { case (cell, rows) =>
-          cell -> rows.sortBy(_.getInt(1)).map(_.getDouble(2))
-        }
-      cents = Array.tabulate(k)(i => means.getOrElse(i, cents(i)))
-    }
-    cents
-  }
-
-  /** IVF ANN: Lloyd's-trained coarse quantizer (see [[trainCentroids]]),
-    * corpus bucketed into inverted lists by nearest centroid, probe =
-    * exact cosine search within the query's own cell only (nProbe=1; a
-    * query's nearest centroid IS its cell since assignment is shared).
-    * The corpus is never shuffled: assignment is per-row math and the
-    * query side of the probe join is broadcast. */
-  def annIvf(s: SparkSession, dir: String, k: Int, kCells: Int = 8,
-             iters: Int = 3, queryPred: Column = col("vec_id") < 3): DataFrame = {
-    val e = emb(s, dir)
-    val cents = sharedCentroids(s, dir, kCells, iters)
-    val withCell = e.withColumn("cell", cellOf(s, col("v"), cents))
-    val q = broadcast(withCell.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell").as("q_cell")))
-    val scored = q.join(withCell, col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        round(cosineFast(s, col("qv"), col("v")), 6).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("sim"))
-  }
-
-  /** Fully-declarative Lloyd's k-means (q109) — the ORACLE-REPLAYABLE twin
-    * of [[trainCentroids]]: the same assignment/update pair, but expressed
-    * end-to-end as a DataFrame plan (centroids stay a k-row frame, nothing
-    * reaches the driver) with every float rounded at 6 dp so DuckDB replays
-    * each iteration bit-for-bit — a HASH-EXACT trained-clustering query,
-    * where q40's IVF is recall-checked only.
+  /** Fully-declarative Lloyd's k-means (q109) — the engine's one trained
+    * clustering: squared-L2 assignment and mean update expressed end-to-end
+    * as a DataFrame plan (centroids stay a k-row frame, nothing reaches the
+    * driver) with every float rounded at 6 dp so DuckDB replays each
+    * iteration bit-for-bit — a HASH-EXACT trained-clustering query. The ANN
+    * operators below run the iteration-free seeded quantizer
+    * ([[seededCells]]) instead.
     *
     * Deterministic configuration: seeds are the k lowest-`vec_id` vectors,
     * assignment is argmin ROUNDED squared-L2 with ties to the lowest
@@ -264,9 +159,9 @@ object Similarity extends QueryModule {
     * per vector; the update is a (cid, pos) component mean — k×dim cells
     * with map-side partial sums — reassembled into k array rows by a
     * k-row `collect_list` (bounded by dim, never corpus-sized). The vector
-    * itself rides the assignment shuffle (dim×8 B/row); at 100 TB prefer
-    * [[trainCentroids]], which folds centroids into plan literals and never
-    * shuffles the corpus — the trade documented there. */
+    * itself rides the assignment shuffle (dim×8 B/row); at 100 TB the
+    * k×dim centroid table would instead fold into plan literals each
+    * iteration, so the corpus never shuffles. */
   def kmeansRefine(vecs: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
     val s = vecs.sparkSession
     val e = vecs.select(col("vec_id"), col("v"))
@@ -301,16 +196,51 @@ object Similarity extends QueryModule {
       .select(col("vec_id"), col("m.cid").as("cid"), col("m.d2").as("d2"))
   }
 
+  /** The seeded coarse quantizer's centroids: the `kCells` lowest-vec_id
+    * vectors of `e` as `(cid, cv)` — k×dim cells, broadcast by every
+    * assignment against them. */
+  private def seededCentroids(e: DataFrame, kCells: Int): DataFrame =
+    e.filter(col("vec_id") < kCells).select(col("vec_id").as("cid"), col("v").as("cv"))
+
+  /** The seeded cell rule every IVF operator here shares: each `(vec_id, v)`
+    * row of `vecs` goes to the centroid of `cents` ([[seededCentroids]])
+    * with the highest ROUNDED cosine, ties to the lowest centroid id (the
+    * `max(struct(cos, −cid))` argmax, which DuckDB replays exactly).
+    * Returns `(vec_id, cell, carry…)`; the carried columns ride through the
+    * per-vector group as `first` — well-defined, every grouped row carries
+    * the same value. The corpus is never shuffled against the centroids:
+    * the k centroid rows are broadcast and the group collapses back to one
+    * row per vector. */
+  private def seededCells(vecs: DataFrame, cents: DataFrame, carry: String*): DataFrame = {
+    val s = vecs.sparkSession
+    val sc = struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
+      (-col("cid")).as("ncid")).as("sc")
+    vecs.crossJoin(broadcast(cents))
+      .select(col("vec_id") +: carry.map(col) :+ sc: _*)
+      .groupBy(col("vec_id"))
+      .agg(max(col("sc")).as("m"), carry.map(c => first(col(c)).as(c)): _*)
+      .select(col("vec_id") +: (-col("m.ncid")).as("cell") +: carry.map(col): _*)
+  }
+
+  /** Every vector of `dir`'s corpus with its seeded cell ([[seededCells]]
+    * against the `kCells` lowest-id centroids) and the `carry` columns —
+    * the blocking layer of the seeded IVF operators. */
+  private def seededAssigned(s: SparkSession, dir: String, kCells: Int,
+                             carry: String*): DataFrame = {
+    val e = emb(s, dir)
+    seededCells(e, seededCentroids(e, kCells), carry: _*)
+  }
+
   /** SemDeDup (q99) — Abbas et al., "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication" (2023): cluster the embedding
     * corpus with a coarse quantizer, then search for near-duplicates ONLY
     * within each cluster — pairwise cost drops from n² to Σ|cluster|² ≈
     * n²/k, and k grows with the corpus so per-cluster work stays bounded.
     * Deterministic fixture configuration so the DuckDB oracle replays every
-    * step exactly: centroids are the k lowest-vec_id vectors (no Lloyd's
-    * iterations — [[trainCentroids]] is the trained variant, exercised by
-    * q40), assignment is argmax ROUNDED cosine with ties to the lowest
-    * centroid id, and a vector is dropped iff some SAME-CLUSTER vector with
+    * step exactly: the clusters are the seeded quantizer's cells
+    * ([[seededCells]]: the k lowest-vec_id vectors as centroids, no Lloyd's
+    * iterations, argmax ROUNDED cosine with ties to the lowest centroid
+    * id), and a vector is dropped iff some SAME-CLUSTER vector with
     * a lower vec_id has cosine >= `tau` (the paper's keep-one-per-group
     * rule with lowest-id survivorship).
     *
@@ -327,141 +257,35 @@ object Similarity extends QueryModule {
   def semanticDedupFrom(vecs: DataFrame, k: Int, tau: Double): DataFrame = {
     val s = vecs.sparkSession
     val e = vecs.select(col("vec_id"), col("v"))
-    val cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        round(cosineFast(s, col("v"), col("cv")), 6).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("m"))
-      .select(col("vec_id"), (-col("m.ncid")).as("cid"))
+    val assigned = seededCells(e, seededCentroids(e, k))
     val av = assigned.join(e, Seq("vec_id"))
     val maxLower = av.as("x").join(av.as("y"),
-        col("x.cid") === col("y.cid") && col("y.vec_id") < col("x.vec_id"))
+        col("x.cell") === col("y.cell") && col("y.vec_id") < col("x.vec_id"))
       .select(col("x.vec_id").as("vec_id"),
         round(cosineFast(s, col("x.v"), col("y.v")), 6).as("cos"))
       .groupBy(col("vec_id")).agg(max(col("cos")).as("mlc"))
     assigned.join(maxLower, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid").as("cluster_id"),
+      .select(col("vec_id"), col("cell").as("cluster_id"),
         round(coalesce(col("mlc"), lit(-1.0)), 6).as("max_lower_cos"),
         when(coalesce(col("mlc"), lit(-1.0)) >= tau, lit(0L)).otherwise(lit(1L)).as("keep"))
   }
 
-  /** Product-quantization codebooks (Jégou et al. 2011, the PQ stage this
-    * time): the vector splits into `m` subvectors of dim/m components and
-    * each subspace gets its own `ks`-centroid Lloyd's codebook, so a vector
-    * stores as `m` small codes — at (m=8, ks=32) a 64-dim float vector
-    * compresses 32× (256 B → 8 B of codes), the memory step that makes
-    * billion-vector ANN fit an executor cache.
-    *
-    * Trains ALL subspaces in one pass per iteration: subvectors explode to
-    * (vec_id, sub, sv) rows ONCE (checkpointed), assignment is a per-row
-    * branch on `sub` into that subspace's argmin (the same codegen'd
-    * `graft_l2sq` kernel as IVF), and the update is one
-    * (sub, cell, pos)-keyed mean aggregation — so an iteration costs one
-    * scan regardless of `m`, and only the m×ks×(dim/m) codebook table
-    * reaches the driver. Seeds are the `ks` lowest-vec_id vectors'
-    * subvectors; empty cells keep their previous centroid; folds are
-    * sequential — fully deterministic. */
-  def trainPqCodebooks(corpus: DataFrame, m: Int = 8, ks: Int = 32,
-                       iters: Int = 2): Array[Array[Array[Double]]] = {
-    val s = corpus.sparkSession
-    val seedVecs = corpus.orderBy(col("vec_id")).limit(ks)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    require(seedVecs.length == ks, s"corpus has fewer than $ks vectors")
-    // dim derives from the data (never hardcoded: a fixture with a different
-    // embedding width must fail fast here, not silently misalign slices)
-    val dim = seedVecs.head.length
-    require(dim % m == 0, s"m=$m must divide the embedding dim=$dim")
-    require(seedVecs.forall(_.length == dim),
-      s"ragged embedding widths among the $ks seed vectors (expected $dim)")
-    val subDim = dim / m
-    val subs = corpus.select(col("vec_id"),
-        posexplode(expr(s"transform(sequence(0, ${m - 1}), b -> slice(v, b * $subDim + 1, $subDim))")))
-      .withColumnRenamed("pos", "sub").withColumnRenamed("col", "sv")
-      .localCheckpoint()
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(b => seedVecs.map(v => v.slice(b * subDim, (b + 1) * subDim)))
-    for (_ <- 1 to iters) {
-      val cell = books.zipWithIndex.foldLeft(lit(-1): Column) { case (acc, (book, b)) =>
-        when(col("sub") === b, cellOf(s, col("sv"), book)).otherwise(acc)
-      }
-      val means = subs.select(col("sub"), cell.as("cell"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("cell"), col("pos")).agg(avg(col("col")).as("mv"))
-        .collect().groupBy(r => (r.getInt(0), r.getInt(1)))
-      books = Array.tabulate(m)(b => Array.tabulate(ks)(c =>
-        means.get((b, c))
-          .map(_.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray)
-          .getOrElse(books(b)(c))))
-    }
-    books
-  }
-
-  /** PQ code assignment: `(vec_id, codes)` where codes(b) is the nearest
-    * centroid of subspace b — per-row map work against codebook literals,
-    * no join, no shuffle; the corpus never moves. */
-  def pqCodes(corpus: DataFrame, books: Array[Array[Array[Double]]]): DataFrame = {
-    val s = corpus.sparkSession
-    val m = books.length
-    val subDim = books.head.head.length
-    corpus.select(col("vec_id"),
-      array((0 until m).map(b =>
-        cellOf(s, slice(col("v"), b * subDim + 1, subDim), books(b))): _*).as("codes"))
-  }
-
-  /** ANN via PQ asymmetric-distance computation (ADC) + exact re-rank: the
-    * corpus is scanned as CODES ONLY (the 32×-compressed representation —
-    * at 100 TB of vectors this is the difference between scanning 100 TB
-    * and scanning ~1.6 TB), each query scores a code row by summing
-    * per-subspace exact L2 to the looked-up centroid (`element_at` into the
-    * codebook literal — codegen'd, no UDF), keeps an `rerank`-deep ADC
-    * shortlist, and re-scores ONLY that shortlist against the raw vectors
-    * (one semi-join-sized fetch) — the published ADC + re-rank pipeline.
-    * Queries are broadcast; the corpus is never shuffled. Approximate —
-    * recall vs the exact L2 top-k is asserted in DedupSimilaritySpec. */
-  def annPqAdc(s: SparkSession, dir: String, k: Int, m: Int = 8, ks: Int = 32,
-               iters: Int = 2, rerank: Int = 64,
-               queryPred: Column = col("vec_id") < 3): DataFrame = {
-    val e = emb(s, dir)
-    val books = sharedPqBooks(s, dir, m, ks, iters)
-    val subDim = books.head.head.length
-    val coded = pqCodes(e.select(col("vec_id"), col("v")), books)
-    val q = broadcast(e.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
-    val adist = (0 until m).map { b =>
-      distSqFast(s, slice(col("qv"), b * subDim + 1, subDim),
-        element_at(typedlit(books(b).map(_.toSeq).toSeq),
-          (element_at(col("codes"), b + 1) + 1).cast("int")))
-    }.reduce(_ + _)
-    val shortlist = q.join(coded, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("qv"), col("vec_id").as("n_id"), adist.as("adist"))
-    val wa = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
-    val survivors = shortlist.withColumn("arn", row_number().over(wa))
-      .filter(col("arn") <= rerank)
-      .select(col("q_id"), col("qv"), col("n_id"))
-    // exact re-rank of the shortlist only: fetch the raw vectors by key
-    val rescored = survivors
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("nv")), Seq("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(distSqFast(s, col("qv"), col("nv")), 6).as("dist_sq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist_sq"), col("n_id"))
-    rescored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("dist_sq"))
-  }
-
-  /** [[cellOf]] with per-centroid distances ROUNDED at 6 dp before the
-    * argmin (ties → lowest cell id via first-minimum `array_position`) —
-    * the oracle-replayable assignment used by the seeded audit tiers
-    * (q191/q192): DuckDB replays `round(d2, 6)` + `(d2, code)` row_number
-    * ordering exactly, where the unrounded double argmin would be
-    * bit-fragile at ties. */
+  /** Nearest-centroid code (0-based) of vector column `v` against the
+    * centroid literals, with per-centroid squared-L2 distances ROUNDED at
+    * 6 dp before the argmin (ties → lowest code via first-minimum
+    * `array_position`) — the PQ code assignment of the seeded codebooks
+    * (q108/q192/q381): DuckDB replays `round(d2, 6)` + `(d2, code)`
+    * row_number ordering exactly, where an unrounded double argmin would be
+    * bit-fragile at ties. Per-row map work only, no join, no shuffle; the
+    * distance kernel is the native `graft_l2sq` expression when the session
+    * has GraftExtensions. The input column is let-bound as a lambda
+    * variable (the 1-element `transform` trick) so an expensive `v` — e.g.
+    * a slice of the float→double cast — evaluates once, not once per
+    * centroid. */
   def cellOfRounded(s: SparkSession, v: Column, cents: Array[Array[Double]]): Column = {
-    def centLit(c: Array[Double]): Column =
-      array(scala.collection.immutable.ArraySeq.unsafeWrapArray(c.map(lit)): _*)
     def argmin(vv: Column): Column = {
       val ds = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        cents.map(c => round(distSqFast(s, vv, centLit(c)), 6))): _*)
+        cents.map(c => round(distSqFast(s, vv, litArr(c)), 6))): _*)
       (array_position(ds, array_min(ds)) - 1).cast("int")
     }
     element_at(transform(array(v), vv => argmin(vv)), 1)
@@ -473,13 +297,9 @@ object Similarity extends QueryModule {
   def l2TopK(queriesDf: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val sp = queriesDf.sparkSession
     val q = broadcast(queriesDf.select(col("vec_id").as("q_id"), col("v").as("qv")))
-    val scored = q.join(corpus, col("vec_id") =!= col("q_id"))
+    topK(q.join(corpus, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(distSqFast(sp, col("qv"), col("v")), 6).as("dist_sq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist_sq"), col("n_id"))
-    scored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("dist_sq"))
+        round(distSqFast(sp, col("qv"), col("v")), 6).as("dist_sq")), k, "dist_sq", desc = false)
   }
 
   /** Per-query recall/precision of an approximate top-k result against the
@@ -500,38 +320,22 @@ object Similarity extends QueryModule {
       .orderBy(col("q_id"))
   }
 
-  /** IVF probe with a SEEDED (iteration-free) coarse quantizer: centroids
-    * are the `kCells` lowest-vec_id vectors (the q99 convention), assignment
-    * is argmax ROUNDED cosine with ties to the lowest centroid id — every
-    * step SQL-replayable, unlike [[trainCentroids]]' Lloyd's loop. The probe
-    * machinery (cell-restricted exact cosine top-k, nProbe=1, broadcast
-    * query side, corpus never shuffled) is IDENTICAL to [[annIvf]] — this is
-    * the variant the hash-gated audit (q191) runs, so the oracle verifies
-    * the probe pipeline bit-for-bit while the trained quantizer stays
-    * recall-gated in ScalaTest. */
+  /** IVF ANN (q40, audited by q191) with the SEEDED (iteration-free)
+    * coarse quantizer of [[seededCells]]: the corpus is bucketed into
+    * inverted lists by its seeded cell, and a probe is the exact cosine
+    * top-k within the query's own cell only (nProbe=1; [[ivfNprobeCurve]]
+    * sweeps wider probes). Every step is SQL-replayable, so the oracle
+    * verifies the probe pipeline bit-for-bit. The query side of the probe
+    * join is broadcast; the corpus is never shuffled. */
   def annIvfSeeded(s: SparkSession, dir: String, k: Int, kCells: Int = 8,
                    queryPred: Column = col("vec_id") < 3): DataFrame = {
-    val e = emb(s, dir)
-    val cents = e.filter(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"),
-        struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      // first(v) is well-defined: every grouped row carries the same v
-      .agg(max(col("sc")).as("m"), first(col("v")).as("v"))
-      .select(col("vec_id"), (-col("m.ncid")).as("cell"), col("v"))
+    val assigned = seededAssigned(s, dir, kCells, "v")
     val q = broadcast(assigned.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell").as("q_cell")))
-    val scored = q.join(assigned,
+    topK(q.join(assigned,
         col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(cosineFast(s, col("qv"), col("v")), 6).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("sim"))
+        round(cosineFast(s, col("qv"), col("v")), 6).as("sim")), k, "sim", desc = true)
   }
 
   /** kNN majority-vote classification THROUGH the seeded IVF index (q204) —
@@ -557,28 +361,9 @@ object Similarity extends QueryModule {
     * the probe batch would be chunked, or the join shuffled on a
     * finer-than-cell key — the cell key alone (kCells values) must never
     * be the shuffle key. */
-  /** Every vector assigned to its seeded-quantizer cell (k lowest-id
-    * centroids, rounded-cosine argmax with the deterministic −cid
-    * tiebreak) — the shared blocking layer of [[knnClassifySeeded]] (q204)
-    * and [[hardNegatives]] (q242). */
-  private def seededAssigned(s: SparkSession, dir: String,
-                             kCells: Int): DataFrame = {
-    val e = emb(s, dir)
-    val cents = e.filter(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("label"),
-        struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(max(col("sc")).as("m"), first(col("v")).as("v"),
-        first(col("label")).as("label"))
-      .select(col("vec_id"), (-col("m.ncid")).as("cell"), col("v"), col("label"))
-  }
-
   def knnClassifySeeded(s: SparkSession, dir: String, k: Int = 5,
                         kCells: Int = 8): DataFrame = {
-    val assigned = seededAssigned(s, dir, kCells)
+    val assigned = seededAssigned(s, dir, kCells, "v", "label")
     val probes = broadcast(assigned.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("cell").as("q_cell"), col("label").as("true_label")))
@@ -614,9 +399,8 @@ object Similarity extends QueryModule {
     * the serving path's). */
   def ivfNprobeCurve(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val e = emb(s, dir)
-    val cents = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = seededAssigned(s, dir, 8).select(col("vec_id"), col("cell"), col("v"))
+    val cents = seededCentroids(e, 8)
+    val assigned = seededAssigned(s, dir, 8, "v")
     val qs = broadcast(e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("v").as("qv")))
     val qc = qs.crossJoin(broadcast(cents))
@@ -671,7 +455,7 @@ object Similarity extends QueryModule {
     * frame. Anchors whose cell lacks a same-label or different-label
     * neighbor drop out (no triplet exists in-cell). */
   def hardNegatives(s: SparkSession, dir: String, kCells: Int = 8): DataFrame = {
-    val assigned = seededAssigned(s, dir, kCells)
+    val assigned = seededAssigned(s, dir, kCells, "v", "label")
     val probes = broadcast(assigned.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("cell").as("q_cell"), col("label").as("q_label")))
@@ -725,7 +509,7 @@ object Similarity extends QueryModule {
                              iters: Int): (Array[Double], Array[Double]) = {
     val e = emb(s, dir)
     // The iterate vector is a MODEL (dim cells), not data: each round folds
-    // it into plan literals (the trainCentroids bounded-fetch contract), so
+    // it into plan literals (a bounded dim-cell driver fetch), so
     // an iteration costs ONE aggregation — a row-local decimal dot against
     // the literal direction, then a (pos)-keyed 12 dp-term decimal sum with
     // map-side partials (dim groups). No corpus-sized join anywhere; the
@@ -755,8 +539,8 @@ object Similarity extends QueryModule {
   }
 
   /** [[trainDominantDirection]] through the session model layer — the
-    * direction is a silver artifact exactly like the IVF centroids
-    * ([[sharedCentroids]]): trained once per (session, dir, iters), folded
+    * direction is a silver artifact, like the seeded PQ model
+    * ([[seededPqModel]]): trained once per (session, dir, iters), folded
     * into plan literals by every consumer. */
   def sharedDominantDirection(s: SparkSession, dir: String,
                               iters: Int): (Array[Double], Array[Double]) =
@@ -764,8 +548,6 @@ object Similarity extends QueryModule {
 
   // -- row-local decimal-exact vector kernels shared by q207/q208 ----------
   private val decZero12 = lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 12))
-  private def litArr(a: Array[Double]): Column =
-    array(scala.collection.immutable.ArraySeq.unsafeWrapArray(a.map(lit(_))): _*)
   /** Exact (order-independent) sum of a DECIMAL(38,12) term array → double. */
   private def decSumArr(terms: Column): Column =
     aggregate(terms, decZero12, (acc, t) => (acc + t).cast(DecimalType(38, 12)))
@@ -853,17 +635,7 @@ object Similarity extends QueryModule {
     * trade, self-join restricted to cells; the rollup is |labels| rows. */
   def knnLabelNoise(s: SparkSession, dir: String, k: Int = 5,
                     kCells: Int = 8): DataFrame = {
-    val e = emb(s, dir)
-    val cents = e.filter(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("label"),
-        struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(max(col("sc")).as("m"), first(col("v")).as("v"),
-        first(col("label")).as("label"))
-      .select(col("vec_id"), (-col("m.ncid")).as("cell"), col("v"), col("label"))
+    val assigned = seededAssigned(s, dir, kCells, "v", "label")
     // probe side == corpus, so NO broadcast: the self-join shuffles both
     // sides on the cell key (at real scale kCells ~ √n, the standard IVF
     // sizing, so the key spreads; AQE may still broadcast at fixture size)
@@ -934,16 +706,7 @@ object Similarity extends QueryModule {
     * eval side is the small broadcast side by construction. */
   def semanticDecontam(s: SparkSession, dir: String, kCells: Int = 8,
                        threshold: Double = 0.5): DataFrame = {
-    val e = emb(s, dir)
-    val cents = e.filter(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"),
-        struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(max(col("sc")).as("m"), first(col("v")).as("v"))
-      .select(col("vec_id"), (-col("m.ncid")).as("cell"), col("v"))
+    val assigned = seededAssigned(s, dir, kCells, "v")
     val evalSide = broadcast(assigned.filter(col("vec_id") % 17 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell").as("q_cell")))
     val corpus = assigned.filter(col("vec_id") % 17 =!= 0)
@@ -960,13 +723,13 @@ object Similarity extends QueryModule {
   /** Seeded PQ model — codebooks + the corpus codes frame — shared by every
     * PQ consumer (q108 ADC, the q192 audit, q381 IVF-PQ): subspace
     * codebooks are the subvectors of the `ks` lowest-vec_id vectors (a
-    * bounded driver fetch, the trainCentroids contract — k×dim cells, never
-    * the corpus); the CODES frame is the PQ silver artifact (8 B/vector —
-    * in production persisted next to the codebooks, never recomputed per
-    * query), materialized once per (session, dir, m, ks) through the model
-    * layer. The rounded-argmin tree (m × ks × subDim distance terms) is
-    * also the plan whose codegen dominates a cold run — one more reason to
-    * build it once. Returns (codebooks, subDim, codes frame). */
+    * bounded driver fetch — k×dim cells, never the corpus); the CODES
+    * frame is the PQ silver artifact (8 B/vector — in production persisted
+    * next to the codebooks, never recomputed per query), materialized
+    * once per (session, dir, m, ks) through the model layer. The
+    * rounded-argmin tree (m × ks × subDim distance terms) is also the plan
+    * whose codegen dominates a cold run — one more reason to build it
+    * once. Returns (codebooks, subDim, codes frame). */
   private def seededPqModel(s: SparkSession, dir: String, m: Int, ks: Int)
       : (Array[Array[Array[Double]]], Int, DataFrame) = {
     val e = emb(s, dir)
@@ -988,35 +751,41 @@ object Similarity extends QueryModule {
     val books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(b => seeds.map(v => v.slice(b * subDim, (b + 1) * subDim)))
     val coded = SessionLayers.frame(s, "pqSeededCodes", dir, m, ks)(
-      e.select(col("vec_id"),
-        array((0 until m).map(b =>
-          cellOfRounded(s, slice(col("v"), b * subDim + 1, subDim), books(b))): _*).as("codes")))
+      e.select(col("vec_id"), seededCodes(s, books, subDim).as("codes")))
     (books, subDim, coded)
   }
 
-  /** PQ/ADC with SEEDED codebooks: subspace centroids are the subvectors of
-    * the `ks` lowest-vec_id vectors (no Lloyd's iterations), code assignment
-    * is the ROUNDED argmin ([[cellOfRounded]]), and the ADC shortlist
-    * distance sums the per-subspace rounded terms in DECIMAL space
-    * (order-independent — a plain double sum's last-ulp would diverge from
-    * the oracle's unordered SUM). The ADC scan + `rerank`-deep exact re-rank
-    * is IDENTICAL to [[annPqAdc]]; this is the q192 hash-gated variant —
-    * the oracle replays codebook build, code assignment, ADC scoring and
-    * re-rank exactly, while trained-codebook recall stays spec-gated. */
-  def annPqAdcSeeded(s: SparkSession, dir: String, k: Int, m: Int = 8, ks: Int = 32,
-                     rerank: Int = 64,
-                     queryPred: Column = col("vec_id") < 3): DataFrame = {
+  /** The PQ codes of vector column `v`: code b is the [[cellOfRounded]]
+    * nearest centroid of subvector b in codebook b. */
+  private def seededCodes(s: SparkSession, books: Array[Array[Array[Double]]],
+                          subDim: Int): Column =
+    array(books.indices.map(b =>
+      cellOfRounded(s, slice(col("v"), b * subDim + 1, subDim), books(b))): _*)
+
+  /** The ADC scan + exact re-rank of the seeded PQ model of `dir`, shared by
+    * [[annPqAdcSeeded]] and [[annIvfPqSeeded]]: the query side `q`
+    * `(q_id, qv, …)` is broadcast against `cand` of the codes frame (the
+    * whole frame, or the candidates it restricts to) on `on`. Each
+    * candidate's ADC distance sums per-subspace exact L2 to the looked-up
+    * centroid (`element_at` into the codebook literal — codegen'd, no UDF),
+    * each term rounded and summed in DECIMAL space (order-independent — a
+    * plain double sum's last ulp would diverge from the oracle's unordered
+    * SUM). The `rerank`-deep ADC shortlist per query is re-scored against
+    * the raw vectors (one semi-join-sized fetch) and the exact top-`k` by
+    * `dist_sq` returned. The corpus is scanned as codes only and never
+    * shuffled. */
+  private def adcRerank(s: SparkSession, dir: String, k: Int, m: Int, ks: Int,
+                        rerank: Int, q: DataFrame, cand: DataFrame => DataFrame,
+                        on: Column): DataFrame = {
     val e = emb(s, dir)
     val (books, subDim, coded) = seededPqModel(s, dir, m, ks)
-    val q = broadcast(e.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
     val adist = (0 until m).map { b =>
       round(distSqFast(s, slice(col("qv"), b * subDim + 1, subDim),
         element_at(typedlit(books(b).map(_.toSeq).toSeq),
           (element_at(col("codes"), b + 1) + 1).cast("int"))), 6)
         .cast(DecimalType(38, 12))
     }.reduce(_ + _).cast("double")
-    val shortlist = q.join(coded, col("vec_id") =!= col("q_id"))
+    val shortlist = broadcast(q).join(cand(coded), on)
       .select(col("q_id"), col("qv"), col("vec_id").as("n_id"), adist.as("adist"))
     val wa = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
     val survivors = shortlist.withColumn("arn", row_number().over(wa))
@@ -1026,11 +795,23 @@ object Similarity extends QueryModule {
       .join(e.select(col("vec_id").as("n_id"), col("v").as("nv")), Seq("n_id"))
       .select(col("q_id"), col("n_id"),
         round(distSqFast(s, col("qv"), col("nv")), 6).as("dist_sq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist_sq"), col("n_id"))
-    rescored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("dist_sq"))
+    topK(rescored, k, "dist_sq", desc = false)
   }
+
+  /** ANN via PQ codes (q108, audited by q192) with SEEDED codebooks:
+    * subspace centroids are the subvectors of the `ks` lowest-vec_id vectors
+    * (no Lloyd's iterations) and code assignment is the ROUNDED argmin
+    * ([[cellOfRounded]]); at (m=8, ks=32) a 64-dim float vector is stored
+    * as 8 B of codes, 32× smaller. The scan is [[adcRerank]] over every
+    * coded vector; the oracle replays codebook build, code assignment, ADC
+    * scoring and re-rank exactly. Approximate — recall against the exact
+    * L2 top-k is asserted in DedupSimilaritySpec. */
+  def annPqAdcSeeded(s: SparkSession, dir: String, k: Int, m: Int = 8, ks: Int = 32,
+                     rerank: Int = 64,
+                     queryPred: Column = col("vec_id") < 3): DataFrame =
+    adcRerank(s, dir, k, m, ks, rerank,
+      emb(s, dir).filter(queryPred).select(col("vec_id").as("q_id"), col("v").as("qv")),
+      identity, col("vec_id") =!= col("q_id"))
 
   /** Seeded IVF-PQ (q381) — the composed production billion-vector ANN
     * architecture (Jégou et al., "Product Quantization for Nearest Neighbor
@@ -1052,35 +833,14 @@ object Similarity extends QueryModule {
   def annIvfPqSeeded(s: SparkSession, dir: String, k: Int, kCells: Int = 8,
                      m: Int = 8, ks: Int = 32, rerank: Int = 32,
                      queryPred: Column = col("vec_id") < 3): DataFrame = {
-    val e = emb(s, dir)
-    val (books, subDim, coded) = seededPqModel(s, dir, m, ks)
-    val cells = seededAssigned(s, dir, kCells).select(col("vec_id"), col("cell"))
-    // codes ⋈ cells on vec_id: two narrow keyed artifacts (co-bucketed in
-    // production — no corpus-width rows move)
-    val cand = coded.join(cells, Seq("vec_id"))
-    val q = broadcast(seededAssigned(s, dir, kCells).filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell").as("q_cell")))
-    val adist = (0 until m).map { b =>
-      round(distSqFast(s, slice(col("qv"), b * subDim + 1, subDim),
-        element_at(typedlit(books(b).map(_.toSeq).toSeq),
-          (element_at(col("codes"), b + 1) + 1).cast("int"))), 6)
-        .cast(DecimalType(38, 12))
-    }.reduce(_ + _).cast("double")
-    val shortlist = q.join(cand,
-        col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("qv"), col("vec_id").as("n_id"), adist.as("adist"))
-    val wa = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
-    val survivors = shortlist.withColumn("arn", row_number().over(wa))
-      .filter(col("arn") <= rerank)
-      .select(col("q_id"), col("qv"), col("n_id"))
-    val rescored = survivors
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("nv")), Seq("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(distSqFast(s, col("qv"), col("nv")), 6).as("dist_sq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist_sq"), col("n_id"))
-    rescored.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("n_id"), col("dist_sq"))
+    val cells = seededAssigned(s, dir, kCells)
+    adcRerank(s, dir, k, m, ks, rerank,
+      seededAssigned(s, dir, kCells, "v").filter(queryPred)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell").as("q_cell")),
+      // codes ⋈ cells on vec_id: two narrow keyed artifacts (co-bucketed in
+      // production — no corpus-width rows move)
+      _.join(cells, Seq("vec_id")),
+      col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
   }
 
   /** The persisted rows of the composed IVF-PQ index for every vector
@@ -1097,7 +857,7 @@ object Similarity extends QueryModule {
   private[graft] def annIndexRows(s: SparkSession, dir: String, pred: Column,
                                   kCells: Int = 8, m: Int = 8, ks: Int = 32): DataFrame = {
     val (_, _, coded) = seededPqModel(s, dir, m, ks)
-    val cells = seededAssigned(s, dir, kCells).select(col("vec_id"), col("cell"))
+    val cells = seededAssigned(s, dir, kCells)
     // both frames are keyed on vec_id (co-bucketed in production — the join
     // moves only (vec_id, cell) against (vec_id, m codes), never vectors)
     cells.filter(pred).join(coded.filter(pred), Seq("vec_id"))
@@ -1109,9 +869,8 @@ object Similarity extends QueryModule {
   /** Encode an ARBITRARY `(vec_id, v)` frame against the FROZEN seeded
     * model of `dir`'s corpus — the per-micro-batch encode step of the
     * streaming index maintainer (q392, `streaming/StreamParity`): cell from
-    * the kCells lowest-id centroids (rounded-cosine argmax, −cid tiebreak —
-    * [[seededAssigned]]'s rule verbatim) and m PQ codes from the seeded
-    * codebooks ([[seededPqModel]]'s assignment verbatim). Because cell and
+    * [[seededCells]] against the kCells lowest-id centroids and m PQ codes
+    * from [[seededCodes]] against the seeded codebooks. Because cell and
     * codes are content-local per vector under the frozen model, this is
     * row-identical to [[annIndexRows]] on the same ids — which is exactly
     * what lets the streaming MERGE path verify against the same scratch-
@@ -1121,19 +880,8 @@ object Similarity extends QueryModule {
   private[graft] def annIndexRowsOf(s: SparkSession, dir: String, vecs: DataFrame,
                                     kCells: Int = 8, m: Int = 8, ks: Int = 32): DataFrame = {
     val (books, subDim, _) = seededPqModel(s, dir, m, ks)
-    val cents = emb(s, dir).filter(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val cells = vecs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"),
-        struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
-          (-col("cid")).as("ncid")).as("sc"))
-      .groupBy(col("vec_id"))
-      .agg(max(col("sc")).as("m"), first(col("v")).as("v"))
-      .select(col("vec_id"), (-col("m.ncid")).as("cell"), col("v"))
-    cells
-      .select(col("vec_id"), col("cell"),
-        array((0 until m).map(b =>
-          cellOfRounded(s, slice(col("v"), b * subDim + 1, subDim), books(b))): _*).as("codes"))
+    seededCells(vecs, seededCentroids(emb(s, dir), kCells), "v")
+      .select(col("vec_id"), col("cell"), seededCodes(s, books, subDim).as("codes"))
       .select(col("vec_id"), col("cell").cast(LongType).as("cell"),
         posexplode(col("codes")))
       .select(col("vec_id"), col("cell"),
@@ -1165,8 +913,8 @@ object Similarity extends QueryModule {
   }
 
   /** [[gramQuarter]] collected through the session model layer: the 64×64
-    * cell array (≤4096 rows — a bounded model fetch, same class as
-    * [[sharedCentroids]]) is cached per (app, dir) so the spectral
+    * cell array (≤4096 rows — a bounded model fetch, same class as the
+    * seeded PQ model's seed vectors) is cached per (app, dir) so the spectral
     * diagnostics sharing one Gram model (q336 λ₁, q378 top-2) pay for ONE
     * corpus scan per session, not one each. */
   private def sharedGramCells(s: SparkSession, dir: String): Array[org.apache.spark.sql.Row] =
@@ -1294,13 +1042,11 @@ object Similarity extends QueryModule {
         .orderBy(col("label"), col("pred"))
     }),
 
-    // ANN via PQ codes + ADC shortlist + exact re-rank (q108). The
-    // REGISTERED path runs the SEEDED (iteration-free, SQL-replayable)
-    // codebooks so the DuckDB oracle verifies codebook build, code
-    // assignment, ADC scoring and re-rank hash-exactly; the Lloyd's-TRAINED
-    // codebooks ([[annPqAdc]], now served from the session model layer —
-    // [[sharedPqBooks]]) are the production perf path, recall-gated in
-    // DedupSimilaritySpec (monotone-in-rerank floors).
+    // ANN via PQ codes + ADC shortlist + exact re-rank (q108) with the
+    // SEEDED (iteration-free, SQL-replayable) codebooks, so the DuckDB
+    // oracle verifies codebook build, code assignment, ADC scoring and
+    // re-rank hash-exactly; recall is gated in DedupSimilaritySpec
+    // (monotone-in-rerank floors).
     "q108_pq_adc" -> ((s, dir) =>
       annPqAdcSeeded(s, dir, 5).orderBy(col("q_id"), col("rn"))),
 
@@ -1337,7 +1083,7 @@ object Similarity extends QueryModule {
 
     // Hash-exact Lloyd's k-means: 2 declarative assignment/update rounds,
     // every float rounded at 6 dp so the DuckDB oracle replays the trained
-    // clustering bit-for-bit (q40's IVF is the literal-centroid scale twin).
+    // clustering bit-for-bit.
     "q109_kmeans_refine" -> ((s, dir) =>
       kmeansRefine(emb(s, dir)).orderBy(col("vec_id"))),
 
@@ -1355,12 +1101,9 @@ object Similarity extends QueryModule {
     "q39_ann_lsh" -> ((s, dir) =>
       annLsh(s, dir, 5).orderBy(col("q_id"), col("rn"))),
 
-    // ANN via IVF centroid probe (q40). The REGISTERED path runs the SEEDED
-    // quantizer (q99's convention: k lowest-id centroids, rounded-cosine
-    // assignment) so every step is oracle-replayable; the Lloyd's-TRAINED
-    // quantizer ([[annIvf]], served from the session model layer —
-    // [[sharedCentroids]]) is the production perf path, recall-gated in
-    // DedupSimilaritySpec. Probe machinery is identical in both.
+    // ANN via IVF centroid probe (q40) with the SEEDED quantizer (q99's
+    // convention: k lowest-id centroids, rounded-cosine assignment), so
+    // every step is oracle-replayable; recall is audited by q191.
     "q40_ann_ivf" -> ((s, dir) =>
       annIvfSeeded(s, dir, 5).orderBy(col("q_id"), col("rn"))),
 
@@ -1493,7 +1236,7 @@ object Similarity extends QueryModule {
     // convention, decimal-summed.
     "q278_cell_label_nmi" -> ((s, dir) => {
       val dec = DecimalType(38, 12)
-      val ct = seededAssigned(s, dir, 8).select(col("cell"), col("label"))
+      val ct = seededAssigned(s, dir, 8, "label").select(col("cell"), col("label"))
         .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("c"))
         .localCheckpoint()
       val nn = ct.agg(sum(col("c")).as("n"))
@@ -1528,9 +1271,7 @@ object Similarity extends QueryModule {
     // sums per cell.
     "q301_cell_silhouette" -> ((s, dir) => {
       val e = emb(s, dir)
-      val cents = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val allcos = e.crossJoin(broadcast(cents))
+      val allcos = e.crossJoin(broadcast(seededCentroids(e, 8)))
         .select(col("vec_id"), col("cid"),
           round(cosineFast(s, col("v"), col("cv")), 6).as("cos"))
       val w = Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cid"))
@@ -1741,9 +1482,7 @@ object Similarity extends QueryModule {
       import s.implicits._
       val e = emb(s, dir)
       val ks = Seq(2L, 4L, 8L, 16L).toDF("kc")
-      val cents = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
-        .crossJoin(broadcast(ks)).filter(col("cid") < col("kc"))
+      val cents = seededCentroids(e, 16).crossJoin(broadcast(ks)).filter(col("cid") < col("kc"))
       e.crossJoin(broadcast(cents))
         .select(col("kc"), col("vec_id"),
           struct(round(cosineFast(s, col("v"), col("cv")), 6).as("cos"),
@@ -1857,10 +1596,9 @@ object Similarity extends QueryModule {
     // their exact top-k ENTIRELY in-engine, q145-style — and hash-gated:
     // q190 replays the md5-derived hyperplane LSH (signature, multi-probe
     // buckets, in-bucket top-k) in DuckDB from the same plane constants;
-    // q191/q192 audit SEEDED (iteration-free, SQL-replayable) quantizer
-    // variants whose probe/ADC machinery is identical to q40/q108 — only
-    // the quantizer training differs, and trained-codebook recall stays
-    // spec-gated (DedupSimilaritySpec recall floors).
+    // q191/q192 audit q40/q108 themselves: the SEEDED (iteration-free,
+    // SQL-replayable) quantizers, so the oracle replays the whole probe and
+    // ADC pipeline; DedupSimilaritySpec adds recall floors.
     "q190_ann_lsh_audit" -> ((s, dir) => {
       val e = emb(s, dir)
       recallAuditFrom(annLsh(s, dir, 5),

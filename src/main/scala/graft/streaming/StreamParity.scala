@@ -569,7 +569,7 @@ object StreamParity extends QueryModule {
     // once in q390 apply to all). Arriving vectors (q386's batch slice,
     // staged as four json files — doubles round-trip exactly, the q388
     // contract) are ENCODED INSIDE foreachBatch against the frozen seeded
-    // model (annIndexRowsOf — cell + m PQ codes from the corpus-trained
+    // model (annIndexRowsOf — cell + m PQ codes from the corpus' seeded
     // quantizer, content-local per vector) and merged through the
     // txn-marker protocol. Oracle = the SAME ivfPqIndexSql scratch rebuild
     // as q386/q381/q382: the streaming path, the batch CDC path, and the

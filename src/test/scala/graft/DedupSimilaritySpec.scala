@@ -10,8 +10,7 @@ import org.scalatest.matchers.should.Matchers
   * the driver's DuckDB oracle hash-verifies their registered pipelines, but
   * only these specs prove the APPROXIMATION is any good — recall floors,
   * monotonicity, and no-false-positive guarantees against the exact
-  * counterparts on the sf0.001 fixtures, including the Lloyd's-trained
-  * model paths that the registry serves seeded variants of. */
+  * counterparts on the sf0.001 fixtures. */
 class DedupSimilaritySpec extends AnyFunSuite with Matchers {
   import TestSpark.{spark, sf0001}
 
@@ -76,12 +75,9 @@ class DedupSimilaritySpec extends AnyFunSuite with Matchers {
       .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
     val exactTop = Similarity.cosineTopK(e.filter(col("vec_id") < 3), e, 20)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    // registered paths (q40 = seeded quantizer) plus the Lloyd's-TRAINED
-    // IVF perf path, which is no longer registry-reachable but must keep
-    // its recall bar
+    // registered paths: q39 = multi-probe LSH, q40 = seeded IVF quantizer
     val results = Seq("q39_ann_lsh", "q40_ann_ivf")
-      .map(q => q -> SparkEntry.queries(q)(spark, sf0001).collect()) :+
-      ("annIvf(trained)" -> Similarity.annIvf(spark, sf0001, 5).collect())
+      .map(q => q -> SparkEntry.queries(q)(spark, sf0001).collect())
     for ((name, ann) <- results) {
       withClue(name) {
         ann should not be empty
@@ -116,23 +112,6 @@ class DedupSimilaritySpec extends AnyFunSuite with Matchers {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     naive.length should be <= 1000 // else the limit truncates and sets differ
     opt shouldBe naive
-  }
-
-  test("session model layer: cached ANN models are identical to fresh training and are trained once") {
-    // cached-vs-fresh equality (training is deterministic, so the memoized
-    // model can never change a result) ...
-    val e = graft.sources.Tables.read(spark, sf0001, "embeddings")
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
-    val fresh = Similarity.trainCentroids(e, 8, 3)
-    val shared = Similarity.sharedCentroids(spark, sf0001, 8, 3)
-    shared.flatten.toSeq shouldBe fresh.flatten.toSeq
-    val freshBooks = Similarity.trainPqCodebooks(e, 8, 32, 2)
-    val sharedBooks = Similarity.sharedPqBooks(spark, sf0001, 8, 32, 2)
-    sharedBooks.flatten.flatten.toSeq shouldBe freshBooks.flatten.flatten.toSeq
-    // ... and the second shared call is the SAME model instance — the
-    // train-once contract that makes repeated q40/q108-style probes cheap
-    (Similarity.sharedCentroids(spark, sf0001, 8, 3) eq shared) shouldBe true
-    (Similarity.sharedPqBooks(spark, sf0001, 8, 32, 2) eq sharedBooks) shouldBe true
   }
 
   test("noEdgeCache bypass recomputes the seeded ANN pipelines with identical results") {
@@ -176,64 +155,6 @@ class DedupSimilaritySpec extends AnyFunSuite with Matchers {
     plan should not include "BroadcastNestedLoopJoin"
   }
 
-  test("IVF training: Lloyd's iterations never increase quantization cost; cells partition the corpus") {
-    val e = graft.sources.Tables.read(spark, sf0001, "embeddings")
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
-    def cost(cents: Array[Array[Double]]): Double = {
-      // total squared-L2 distance of every vector to its assigned centroid
-      val lits = cents.map(c => array(c.map(lit).toIndexedSeq: _*))
-      e.select(lits.map(cl =>
-          aggregate(zip_with(col("v"), cl, (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, x) => acc + x))
-        .reduce(least(_, _)).as("d"))
-        .agg(sum(col("d"))).collect()(0).getDouble(0)
-    }
-    val seeds = Similarity.trainCentroids(e, k = 4, iters = 0)
-    val costs = (0 to 3).map(i => cost(Similarity.trainCentroids(e, k = 4, iters = i)))
-    // Lloyd's monotonicity: assignment(argmin) + mean update never increases
-    // the objective; training must beat (or match) the raw seeds
-    costs.sliding(2).foreach { case Seq(a, b) => b should be <= a + 1e-9 }
-    costs.last should be < cost(seeds) + 1e-9
-    // the quantizer partitions: every vector lands in exactly one cell 0..k-1
-    val trained = Similarity.trainCentroids(e, k = 4, iters = 3)
-    val cells = e.select(Similarity.cellOf(spark, col("v"), trained).as("cell"))
-      .groupBy(col("cell")).count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    cells.keySet.forall(c => c >= 0 && c < 4) shouldBe true
-    cells.values.sum shouldBe e.count()
-  }
-
-  test("PQ: codebooks are deterministic, codes partition, Lloyd's never increases cost") {
-    val e = graft.sources.Tables.read(spark, sf0001, "embeddings")
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
-    val books = Similarity.trainPqCodebooks(e, m = 4, ks = 16, iters = 2)
-    books.length shouldBe 4
-    books.foreach { bk => bk.length shouldBe 16; bk.foreach(_.length shouldBe 16) }
-    // deterministic retrain: identical codebooks bit-for-bit
-    val books2 = Similarity.trainPqCodebooks(e, m = 4, ks = 16, iters = 2)
-    books.flatten.flatten.toSeq shouldBe books2.flatten.flatten.toSeq
-    // codes in range, one per subspace
-    val codes = Similarity.pqCodes(e, books).collect()
-    codes.length shouldBe e.count()
-    codes.foreach { r =>
-      val cs = r.getSeq[Int](1)
-      cs.length shouldBe 4
-      cs.foreach(c => c should (be >= 0 and be < 16))
-    }
-    // per-subspace quantization cost is non-increasing over Lloyd's rounds
-    def cost(bks: Array[Array[Array[Double]]]): Double = {
-      val per = (0 until 4).map { b =>
-        val sv = slice(col("v"), b * 16 + 1, 16)
-        bks(b).map(c => aggregate(
-            zip_with(sv, array(c.map(lit).toIndexedSeq: _*), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, x) => acc + x))
-          .reduce(least(_, _))
-      }.reduce(_ + _)
-      e.select(per.as("d")).agg(sum(col("d"))).head.getDouble(0)
-    }
-    val costs = (0 to 2).map(i => cost(Similarity.trainPqCodebooks(e, m = 4, ks = 16, iters = i)))
-    costs.sliding(2).foreach { case Seq(a, b) => b should be <= a + 1e-9; case _ => () }
-  }
-
   test("PQ-ADC + exact re-rank recalls the exact L2 top-k") {
     val e = graft.sources.Tables.read(spark, sf0001, "embeddings")
       .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
@@ -249,7 +170,7 @@ class DedupSimilaritySpec extends AnyFunSuite with Matchers {
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallAt(rerank: Int): Double = {
-      val ann = Similarity.annPqAdc(spark, sf0001, 5, rerank = rerank).collect()
+      val ann = Similarity.annPqAdcSeeded(spark, sf0001, 5, rerank = rerank).collect()
       ann.map(r => r.getLong(0)).distinct.length shouldBe 3
       ann.map(r => (r.getLong(0), r.getLong(2))).count(exact.contains).toDouble / exact.size
     }
