@@ -21,6 +21,43 @@ def norm(v):
         return "NaN"
     return v
 
+def cell_level(a, b):
+    """0 = equal, 1 = floats within 1e-9 but not bit-exact, 2 = different."""
+    a, b = norm(a), norm(b)
+    if a == b or (a is None and b is None):
+        return 0
+    if isinstance(a, float) and isinstance(b, float) and \
+            abs(a - b) <= 1e-9 * max(1.0, abs(a)):
+        return 1
+    return 2
+
+def first_diffs(exp, got, cols):
+    """Scan the rows both frames have, in order. Returns (hard, soft): the
+    lowest row index with a cell that differs, and the lowest with a cell not
+    bit-exact, each as (row, [(col, got, oracle), ...]) naming every such
+    column at that row, or None."""
+    evs = [exp[c].tolist() for c in cols]
+    gvs = [got[c].tolist() for c in cols]
+    hard = soft = None
+    for i in range(min(len(exp), len(got))):
+        levels = [cell_level(ev[i], gv[i]) for ev, gv in zip(evs, gvs)]
+        if not any(levels):
+            continue
+        def at(ok):
+            return (i, [(c, gv[i], ev[i]) for c, ev, gv, lv
+                        in zip(cols, evs, gvs, levels) if ok(lv)])
+        if soft is None:
+            soft = at(lambda lv: lv > 0)
+        if 2 in levels:
+            hard = at(lambda lv: lv == 2)
+            break
+    return hard, soft
+
+def describe(diff):
+    i, cells = diff
+    return f"row={i}: " + "; ".join(
+        f"col={c} got {g!r} != oracle {e!r}" for c, g, e in cells)
+
 def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
@@ -60,37 +97,29 @@ def main(sfdir, outdir):
             n_fail += 1
             continue
         exp, got = exp[ecols], got[ecols]
+        hard, soft = first_diffs(exp, got, ecols)
         if len(exp) != len(got):
-            print(f"FAIL {name}: rows {len(got)} != oracle {len(exp)}")
+            if hard is None:  # every shared row agrees: the first extra row differs
+                i = min(len(exp), len(got))
+                side, extra = ("got", got) if len(got) > len(exp) else ("oracle", exp)
+                row = {c: extra[c].iloc[i:i + 1].tolist()[0] for c in ecols}
+                where = f"row={i}: only {side} has {row!r}"
+            else:
+                where = describe(hard)
+            print(f"FAIL {name}: rows {len(got)} != oracle {len(exp)}; "
+                  f"first positional diff {where}")
             n_fail += 1
-            continue
-        exact = True
-        close = True
-        worst = None
-        for c in ecols:
-            ev, gv = exp[c].tolist(), got[c].tolist()
-            for i, (a, b) in enumerate(zip(ev, gv)):
-                a, b = norm(a), norm(b)
-                if a == b or (a is None and b is None):
-                    continue
-                exact = False
-                if isinstance(a, float) and isinstance(b, float) and \
-                        abs(a - b) <= 1e-9 * max(1.0, abs(a)):
-                    continue
-                close = False
-                if worst is None:
-                    worst = (c, i, a, b)
-        if exact:
-            print(f"PASS {name} ({len(got)} rows)")
-            n_pass += 1
-        elif close:
+        elif hard is not None:
+            print(f"FAIL {name}: first diff {describe(hard)}")
+            n_fail += 1
+        elif soft is not None:
             print(f"WARN {name}: values within 1e-9 but not bit-exact "
-                  f"({len(got)} rows) — may still fail a strict hash gate")
+                  f"({len(got)} rows), first at {describe(soft)} "
+                  f"— may still fail a strict hash gate")
             n_fail += 1
         else:
-            c, i, a, b = worst
-            print(f"FAIL {name}: first diff col={c} row={i}: got {b!r} != oracle {a!r}")
-            n_fail += 1
+            print(f"PASS {name} ({len(got)} rows)")
+            n_pass += 1
     print(f"\n{n_pass} exact-pass / {n_pass + n_fail} oracled queries")
     return 1 if n_fail else 0
 

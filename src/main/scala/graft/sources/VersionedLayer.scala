@@ -44,14 +44,22 @@ import org.apache.spark.sql.types._
   *   1. stage: the writer materializes any NEW data files under
   *      `_data/<uuid>` and its manifest under `root/_staged-<uuid>` — no
   *      two writers ever touch the same staging path;
-  *   2. claim: it picks N = (highest claimed-or-committed) + 1 and tries to
-  *      create `_claims/N` exclusively. Exclusive create is the
-  *      filesystem's compare-and-swap — atomic on HDFS (the NameNode
+  *   2. claim: it tries to create `_claims/N` exclusively. Exclusive create
+  *      is the filesystem's compare-and-swap — atomic on HDFS (the NameNode
   *      serializes namespace mutations) and on POSIX via O_EXCL (local
   *      filesystems go through `java.nio` precisely because the Hadoop
-  *      local-FS shim's create is check-then-act, not atomic). Losing the
-  *      race just advances N and retries the (cheap) claim — data files and
-  *      manifest are never re-staged;
+  *      local-FS shim's create is check-then-act, not atomic). Which N
+  *      depends on what the snapshot was derived from:
+  *      - a commit derived from a base version ([[merge]], [[deleteKeys]],
+  *        [[compact]]) may only claim N = base+1. Losing that race means
+  *        another writer published after the base was read, so the writer
+  *        drops what it staged, re-reads the advanced base, re-derives and
+  *        claims again — Delta's conflict check, made exact by the dense
+  *        log ([[serializableCommit]]);
+  *      - a blind [[write]] claims N = (highest claimed-or-committed) + 1.
+  *        Losing the race just advances N and retries the (cheap) claim —
+  *        blind overwrites commute, so data files and manifest are never
+  *        re-staged, and the write lands past a crashed writer's claim;
   *   3. publish: owning N, the writer clears any uncommitted `_manifests/N`
   *      debris a crashed predecessor left, renames its staged manifest to
   *      `_manifests/N`, and creates `_commits/N`. Both steps are
@@ -62,12 +70,15 @@ import org.apache.spark.sql.types._
   *     and the highest committed marker is the published snapshot
   *     (blind-overwrite snapshots commute — the same answer Delta gives
   *     concurrent `mode("overwrite")` writers after its own retry loop);
+  *     a derived commit includes every commit before it, so racing keyed
+  *     writers lose no update;
   *   - a reader that resolved version N keeps reading N's immutable files
   *     even while N+1 lands (snapshot isolation);
   *   - a writer that dies at ANY step leaves the committed state — and
   *     every reader — untouched (atomicity): it leaves an unreferenced
   *     `_data` pool, a `_staged-*` manifest, a dangling claim, or an
-  *     unmarked `_manifests/N`, all invisible;
+  *     unmarked `_manifests/N`, all invisible. A dangling claim at base+1
+  *     does block derived commits until [[vacuum]] clears it;
   *   - old snapshots stay readable by version until [[vacuum]] (time travel).
   *
   * Honest scope notes: on object stores without atomic exclusive-create
@@ -118,6 +129,11 @@ object VersionedLayer {
   private val HiveNullPartition = "__HIVE_DEFAULT_PARTITION__"
 
   private val MaxClaimAttempts = 1000
+  /** A derived commit's retry bound and its wait for a race winner's commit
+    * marker ([[serializableCommit]]): about 6 s of waiting behind a claim
+    * nobody publishes before the commit gives up naming it. */
+  private val DerivedCommitAttempts = 30
+  private val LostRaceWaitMs = 200L
   /** Stats are collected for the first 32 orderable atomic columns —
     * Delta's `dataSkippingNumIndexedCols` default, same rationale: stats
     * collection reads the new files back column-pruned, and unbounded wide
@@ -553,10 +569,11 @@ object VersionedLayer {
   // ------------------------------------------------------------------ publish
 
   /** Stage the manifest, win a version number, publish. `pinned = None`
-    * claims the next free number with retry (blind overwrites commute, any
-    * slot is fine); `pinned = Some(n)` is the serializable-merge discipline —
-    * the commit must land exactly at base+1 or not at all, so a lost CAS
-    * returns None and the caller re-derives from the advanced base. */
+    * claims the next free number with retry — [[write]]'s rule (blind
+    * overwrites commute, any slot is fine); `pinned = Some(n)` is the
+    * derived-commit rule ([[serializableCommit]]) — the commit must land
+    * exactly at base+1 or not at all, so a lost CAS returns None and the
+    * caller re-derives from the advanced base. */
   private def publish(spark: SparkSession, root: String, man: Manifest,
                       pinned: Option[Long]): Option[Long] = {
     val f = fs(spark, root)
@@ -601,7 +618,8 @@ object VersionedLayer {
     * version and publish it. Returns the committed version number. Safe
     * under writer crashes (debris stays invisible; a retry claims the next
     * free number) and under concurrent writers (the claim CAS arbitrates —
-    * see the commit protocol above).
+    * see the commit protocol above). The only commit that claims the next
+    * free number: it reads no base, so it lands past any held claim.
     *
     * `layoutBy` gives the layer a persistent hive-partitioned layout
     * (`partitionBy` under each `_data` pool): [[merge]]/[[deleteKeys]]
@@ -859,6 +877,35 @@ object VersionedLayer {
     }
   }
 
+  /** Materialize the delta for the duration of a merge (Delta's
+    * materializeSource discipline): the pruned merge consumes the delta in
+    * up to three actions — staging write, touched-file discovery, survivor
+    * anti-join — and without pinning it each would recompute the delta's
+    * lineage (q392's per-micro-batch PQ encode, 3×), and a non-
+    * deterministic delta could even DIVERGE between discovery and write.
+    * One pin also serves every attempt of a commit that loses a race and
+    * re-derives ([[serializableCommit]]). The persist itself costs no extra
+    * job: it is lazy, and the staging write (the commit's first action
+    * since the round-21 stage-first restructure) populates the cache as it
+    * writes. Deltas the caller already persisted are used as-is (and not
+    * unpersisted behind the caller's back). */
+  private def withMaterializedDelta[T](delta: DataFrame)(body: DataFrame => T): T = {
+    val ownPin = delta.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    // Round-22 measured and REJECTED alternative (guide §1.1's "the ideal
+    // plan is usually slower at first"): pinning with a lazy localCheckpoint
+    // instead of persist — to truncate the delta's lineage under the 2-3
+    // per-commit QueryExecutions — consistently cost MORE than the lineage
+    // re-traversal it saved at commit scale (same-window reps=5 A/B:
+    // q396 3.12→4.01 s, q390 2.31→2.81 s; checkpoint finalization adds its
+    // own post-job choreography and recompute-missing-partitions jobs).
+    // persist keeps the single-computation guarantee with none of that.
+    val pinned = if (ownPin)
+      delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else delta
+    try body(pinned)
+    finally if (ownPin) { pinned.unpersist(false); () }
+  }
+
   /** Keyed upsert (MERGE semantics, whole-row update): publish a new
     * version holding `delta`'s rows plus every published row whose key is
     * absent from `delta` — matched keys take the delta row, unmatched delta
@@ -878,115 +925,58 @@ object VersionedLayer {
     *     key-local layout (range-partitioned ids) or many-file layout is
     *     what keeps the touched set small, exactly as with Delta's MERGE.
     *
-    * Concurrency contract: version arbitration still serializes writers
-    * onto distinct versions, but merge derives its snapshot from the
-    * version it READ — two simultaneous mergers both reading N would each
-    * publish a child of N and the later one silently drops the earlier
-    * delta (the lost-update anomaly Delta detects with its conflict
-    * checker). Run one merger at a time per layer — or use
-    * [[mergeSerializable]], which adds Delta's conflict-detection retry
-    * loop and makes racing mergers serializable; concurrent blind
-    * [[write]] overwrites remain safe either way. */
-  /** Materialize the delta for the duration of a merge (Delta's
-    * materializeSource discipline): the pruned merge consumes the delta in
-    * up to three actions — staging write, touched-file discovery, survivor
-    * anti-join — and without pinning it each would recompute the delta's
-    * lineage (q392's per-micro-batch PQ encode, 3×), and a non-
-    * deterministic delta could even DIVERGE between discovery and write.
-    * The persist itself costs no extra job: it is lazy, and the staging
-    * write (the commit's first action since the round-21 stage-first
-    * restructure) populates the cache as it writes. Deltas the caller
-    * already persisted are used as-is (and not unpersisted behind the
-    * caller's back). */
-  private def withMaterializedDelta[T](delta: DataFrame)(body: DataFrame => T): T = {
-    val ownPin = delta.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    // Round-22 measured and REJECTED alternative (guide §1.1's "the ideal
-    // plan is usually slower at first"): pinning with a lazy localCheckpoint
-    // instead of persist — to truncate the delta's lineage under the 2-3
-    // per-commit QueryExecutions — consistently cost MORE than the lineage
-    // re-traversal it saved at commit scale (same-window reps=5 A/B:
-    // q396 3.12→4.01 s, q390 2.31→2.81 s; checkpoint finalization adds its
-    // own post-job choreography and recompute-missing-partitions jobs).
-    // persist keeps the single-computation guarantee with none of that.
-    val pinned = if (ownPin)
-      delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else delta
-    try body(pinned)
-    finally if (ownPin) { pinned.unpersist(false); () }
-  }
-
+    * Concurrency contract: the merge derives its snapshot from the version
+    * it read and may only publish at that base+1 ([[serializableCommit]]).
+    * Two mergers that read the same base race for one claim; the loser
+    * re-reads the advanced base and re-derives, so the winner's rows are
+    * kept — racing merges and deletes are serializable and commit densely
+    * and in order (asserted in VersionedLayerSpec with racing threads).
+    * The rule has two costs:
+    *   - a lost race re-derives AND re-stages against the moved base — only
+    *     the touched files' rewrite (file pruning applies on every attempt),
+    *     with the delta materialized once for all attempts;
+    *   - a writer that crashed holding claim base+1 blocks the merge until
+    *     [[vacuum]] clears the claim: after 30 attempts 200 ms apart the
+    *     merge throws a diagnostic naming it.
+    * A concurrent blind [[write]] never waits: it lands past any held claim,
+    * and when it wins the race it supersedes earlier merges by design (it is
+    * later in the serial order and replaces the table). */
   def merge(delta: DataFrame, root: String, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = delta.sparkSession
-    latestVersion(spark, root) match {
-      case None => write(delta, root)
-      case Some(v) => withMaterializedDelta(delta) { d =>
-        val (man, _) = mergedSnapshot(spark, root, readManifest(spark, root, v), d, keyCols)
-        publish(spark, root, man, None).get
-      }
-    }
-  }
-
-  /** [[merge]] with Delta's optimistic-concurrency discipline on top: the
-    * lost-update anomaly documented on [[merge]] (two mergers reading the
-    * same base each publish a child of it; the later commit silently drops
-    * the earlier delta) is eliminated by pinning the commit NUMBER to the
-    * base: a serializable merge may only publish version base+1. The claim
-    * CAS then arbitrates conflicting mergers directly — exactly one writer
-    * per version number — and the loser RE-READS the (now advanced) base,
-    * re-derives its snapshot so the winner's rows are included, and retries
-    * against the new base+1. Versions therefore commit densely and in
-    * order, which is what makes "my base is the latest commit" a
-    * serializability proof: when this writer owns claim base+1 and base is
-    * the newest commit marker, no unseen merge can ever slot between them.
-    *
-    * Liveness is bounded, not unconditional (the same trade every
-    * filesystem-log format makes): a claim owner that died before
-    * publishing holds base+1 hostage, so losers wait `waitMs` per attempt
-    * for the marker to appear and give up after `maxRetries` with a
-    * diagnosis naming the dangling claim ([[vacuum]] collects it). Each
-    * retry re-derives and re-stages against the moved base — but stages
-    * only the TOUCHED files' rewrite, not the table (file pruning applies
-    * on every attempt), and the delta is materialized ONCE for all
-    * attempts ([[withMaterializedDelta]]), never recomputed.
-    *
-    * Concurrent [[mergeSerializable]] callers with commuting deltas all
-    * land (asserted in VersionedLayerSpec with racing threads); mixing in
-    * concurrent blind [[write]]s keeps every snapshot well-formed but a
-    * blind overwrite that wins the race supersedes earlier merges by
-    * design (it is later in the serial order and replaces the table). */
-  def mergeSerializable(delta: DataFrame, root: String, keyCols: Seq[String],
-                        maxRetries: Int = 30, waitMs: Long = 200): Long = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val spark = delta.sparkSession
     withMaterializedDelta(delta) { d =>
-      serializableCommit(spark, root, "mergeSerializable", maxRetries, waitMs) { base =>
-        base match {
-          case None =>
-            val (entries, p) = stageDataFiles(d, root)
-            (Manifest(d.schema, entries), Seq(p))
-          case Some(v) =>
-            mergedSnapshot(spark, root, readManifest(spark, root, v), d, keyCols)
-        }
+      serializableCommit(spark, root, "merge") {
+        case None =>
+          val (entries, p) = stageDataFiles(d, root)
+          (Manifest(d.schema, entries), Seq(p))
+        case Some(v) =>
+          mergedSnapshot(spark, root, readManifest(spark, root, v), d, keyCols)
       }
     }
   }
 
-  /** The pinned-claim optimistic-retry loop shared by [[mergeSerializable]]
-    * and [[deleteKeysSerializable]]: derive a snapshot from the CURRENT
-    * base, try to publish at exactly base+1 (the claim CAS arbitrates), on
-    * a lost race drop the attempt's staged pools, wait for the winner's
-    * marker, and re-derive from the advanced base. `derive` receives the
+  /** The pinned-claim optimistic-retry loop every derived commit
+    * ([[merge]], [[deleteKeys]], [[compact]]) publishes through: derive a
+    * snapshot from the CURRENT base, try to publish at exactly base+1 (the
+    * claim CAS arbitrates), on a lost race drop the attempt's staged pools,
+    * wait for the winner's marker, and re-derive from the advanced base.
+    * Versions therefore commit densely and in order, which is what makes
+    * "my base is the latest commit" a serializability proof: when this
+    * writer owns claim base+1 and base is the newest commit marker, no
+    * unseen commit can slot between them. Liveness is bounded, not
+    * unconditional (the same trade every filesystem-log format makes): a
+    * claim owner that died before publishing holds base+1 hostage, and the
+    * loop gives up after [[DerivedCommitAttempts]] with a diagnosis naming
+    * the dangling claim ([[vacuum]] collects it). `derive` receives the
     * base version (None = empty layer) and returns the staged manifest plus
     * the pools it staged (empty when the derivation staged nothing — a
     * no-op delete carries every file by reference). */
-  private def serializableCommit(spark: SparkSession, root: String, what: String,
-                                 maxRetries: Int, waitMs: Long)
+  private def serializableCommit(spark: SparkSession, root: String, what: String)
                                 (derive: Option[Long] => (Manifest, Seq[Path])): Long = {
     val f = fs(spark, root)
     var attempts = 0
     var won: Option[Long] = None
-    while (won.isEmpty && attempts < maxRetries) {
+    while (won.isEmpty && attempts < DerivedCommitAttempts) {
       val base = latestVersion(spark, root)
       val (man, pools) = derive(base)
       won = publish(spark, root, man, Some(base.getOrElse(0L) + 1))
@@ -996,12 +986,12 @@ object VersionedLayer {
         // moved base.
         pools.foreach(p => f.delete(p, true))
         if (latestVersion(spark, root).getOrElse(0L) < base.getOrElse(0L) + 1)
-          Thread.sleep(waitMs)
+          Thread.sleep(LostRaceWaitMs)
         attempts += 1
       }
     }
     won.getOrElse(throw new IllegalStateException(
-      s"$what lost the commit race $maxRetries times under $root; " +
+      s"$what lost the commit race $DerivedCommitAttempts times under $root; " +
         s"if no concurrent writer is live, a crashed writer's dangling claim " +
         s"${latestVersion(spark, root).getOrElse(0L) + 1} is blocking the log — vacuum reclaims it"))
   }
@@ -1026,7 +1016,7 @@ object VersionedLayer {
   def idempotentMergeBatch(root: String, keyCols: Seq[String], appId: String)
                           (batch: DataFrame, batchId: Long): Unit =
     idempotentBatch(root, appId, batchId, batch.sparkSession) {
-      mergeSerializable(batch, root, keyCols); ()
+      merge(batch, root, keyCols); ()
     }
 
   /** [[deleteKeys]] as an exactly-once-EFFECT streaming sink — the
@@ -1038,13 +1028,11 @@ object VersionedLayer {
   def idempotentDeleteBatch(root: String, keyCols: Seq[String], appId: String)
                            (batch: DataFrame, batchId: Long): Unit =
     idempotentBatch(root, appId, batchId, batch.sparkSession) {
-      // serializable, not plain: the takedown stream's documented
-      // deployment runs NEXT TO the CDC merge stream on the same layer
-      // (q391/q392 + q396), and a plain delete racing a merge could lose
-      // either side's effect — a resurrected takedown being the worst
-      // direction. The pinned-claim loop makes merge+delete interleavings
-      // serializable (spec-pinned with racing threads).
-      deleteKeysSerializable(batch, root, keyCols); ()
+      // the takedown stream's documented deployment runs NEXT TO the CDC
+      // merge stream on the same layer (q391/q392 + q396); both commit at
+      // base+1 only, so a racing merge can never resurrect a takedown
+      // (spec-pinned with racing threads)
+      deleteKeys(batch, root, keyCols); ()
     }
 
   private def idempotentBatch(root: String, appId: String, batchId: Long,
@@ -1070,48 +1058,29 @@ object VersionedLayer {
     * alone from a `(doc_id, band_id)` index) removes every row of that
     * prefix. Deleting keys present in no file publishes a no-op version
     * (same file set — the audit trail of a takedown that matched nothing).
-    * CONCURRENCY: like [[merge]], this form derives from the version it
-    * read and publishes at the next free number with NO conflict detection —
-    * single-writer discipline only. Any deployment with a concurrent writer
-    * on the layer (the q391/q392 + q396 matrix: a CDC merge stream racing a
-    * takedown stream) must use [[deleteKeysSerializable]], or a racing merge
-    * can silently resurrect the deleted keys. Returns the committed version. */
+    * CONCURRENCY: the same one rule as [[merge]] — the delete derives from
+    * the version it read and publishes only at base+1, so a merge (or
+    * another delete) that slipped in first costs a lost CAS and the delete
+    * re-derives from the advanced base. Deleted keys can never be
+    * resurrected by a racing merge, and a racing merge's rows are never
+    * dropped by a stale delete derivation (the q391/q392 + q396 matrix: a
+    * CDC merge stream racing a takedown stream; spec-pinned with racing
+    * merge+delete threads). Same bounded wait behind a crashed writer's
+    * claim as [[merge]]. Requires a published version (an empty layer has
+    * nothing to delete). Returns the committed version. */
   def deleteKeys(keys: DataFrame, root: String, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
     val spark = keys.sparkSession
-    val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no published version under $root"))
     withMaterializedDelta(keyColumns(keys, keyCols)) { k =>
-      val (man, _) = deletedSnapshot(spark, root, v, k, keyCols)
-      publish(spark, root, man, None).get
-    }
-  }
-
-  /** [[deleteKeys]] with the same pinned-claim serializable discipline as
-    * [[mergeSerializable]] — the takedown form that is safe AGAINST
-    * CONCURRENT WRITERS on the layer: the commit may only land at base+1,
-    * so a merge (or another delete) that slipped in first costs a lost CAS
-    * and the delete re-derives from the advanced base — deleted keys can
-    * never be resurrected by a racing merge, and the racing merge's rows
-    * are never dropped by a stale delete derivation (spec-pinned with
-    * racing merge+delete threads). Same bounded-liveness trade as
-    * [[mergeSerializable]]: a crashed claim owner blocks base+1 until
-    * [[vacuum]] reclaims it. Requires a published version (an empty layer
-    * has nothing to delete). */
-  def deleteKeysSerializable(keys: DataFrame, root: String, keyCols: Seq[String],
-                             maxRetries: Int = 30, waitMs: Long = 200): Long = {
-    require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
-    val spark = keys.sparkSession
-    latestVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no published version under $root"))
-    withMaterializedDelta(keyColumns(keys, keyCols)) { k =>
-      serializableCommit(spark, root, "deleteKeysSerializable", maxRetries, waitMs) { base =>
-        val v = base.getOrElse(throw new IllegalStateException(
-          s"no published version under $root"))
-        deletedSnapshot(spark, root, v, k, keyCols)
+      serializableCommit(spark, root, "deleteKeys") { base =>
+        deletedSnapshot(spark, root, publishedBase(root, base), k, keyCols)
       }
     }
   }
+
+  /** The base a derived commit that needs existing rows starts from. */
+  private def publishedBase(root: String, base: Option[Long]): Long =
+    base.getOrElse(throw new IllegalStateException(s"no published version under $root"))
 
   // no dropDuplicates: the bounds agg, the left-semi discovery and the
   // left-anti rewrite give the same result with repeated keys
@@ -1142,6 +1111,10 @@ object VersionedLayer {
   /** Compact the published snapshot into `targetFiles` parquet files and
     * publish the rewrite as a NEW version (contents identical — asserted in
     * the spec; prior versions stay time-travelable until [[vacuum]]). The
+    * rewrite is derived from the version it read, so it commits through the
+    * same base+1 rule as [[merge]]: a merge that lands between the read and
+    * the publish makes the compact re-derive from the merged version
+    * instead of overwriting it. The
     * small-file problem is operational reality at scale — and MORE so with
     * file-pruned merges, whose appended deltas accumulate small files by
     * design: a week of incremental merges leaves thousands of files whose
@@ -1161,19 +1134,20 @@ object VersionedLayer {
   def compact(spark: SparkSession, root: String, targetFiles: Int = 1,
               sortBy: Seq[String] = Nil): Long = {
     val n = math.max(targetFiles, 1)
-    val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no published version under $root"))
-    // compaction preserves the layer's hive layout; with a layout,
-    // `targetFiles` bounds files PER PARTITION VALUE (each write task
-    // splits by partition dir), which is the bound that matters — scans
-    // and probes are per-partition
-    val layout = readManifest(spark, root, v).layout
-    val snap = read(spark, root)
-    val shaped =
-      if (sortBy.isEmpty) snap.coalesce(n)
-      else snap.repartitionByRange(n, sortBy.map(col): _*)
-        .sortWithinPartitions(sortBy.map(col): _*)
-    write(shaped, root, layout)
+    serializableCommit(spark, root, "compact") { base =>
+      // compaction preserves the layer's hive layout; with a layout,
+      // `targetFiles` bounds files PER PARTITION VALUE (each write task
+      // splits by partition dir), which is the bound that matters — scans
+      // and probes are per-partition
+      val man = readManifest(spark, root, publishedBase(root, base))
+      val snap = readFiles(spark, root, man.schema, man.files)
+      val shaped =
+        if (sortBy.isEmpty) snap.coalesce(n)
+        else snap.repartitionByRange(n, sortBy.map(col): _*)
+          .sortWithinPartitions(sortBy.map(col): _*)
+      val (entries, pool) = stageDataFiles(shaped, root, man.layout)
+      (Manifest(shaped.schema, entries, man.layout), Seq(pool))
+    }
   }
 
   /** Snapshot diff — change-data-capture BETWEEN committed versions, the

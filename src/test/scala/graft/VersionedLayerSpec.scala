@@ -64,6 +64,89 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     VersionedLayer.read(spark, root, Some(2L)).collect().map(_.getInt(0)) shouldBe Array(2)
   }
 
+  // ---- crash phases of a keyed commit: the debris a dead writer leaves ----
+
+  /** Leave by hand what a writer that died during the commit protocol
+    * leaves: phase 1 = its staged `_data` pool, 2 = plus its `_staged-*`
+    * manifest, 3 = plus its claim on version `n`, 4 = that claim with the
+    * staged manifest renamed to `_manifests/n` but no commit marker.
+    * Returns the dead writer's pool directory. */
+  private def crashAt(root: String, phase: Int, n: Long): java.io.File = {
+    val pool = new java.io.File(root, s"_data/dead-${java.util.UUID.randomUUID()}")
+    val debris = Seq((9, "dead")).toDF("k", "s").coalesce(1)
+    debris.write.parquet(pool.getPath)
+    if (phase >= 2) {
+      val part = pool.listFiles().filter(_.getName.endsWith(".parquet")).head
+      val quotedSchema =
+        new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(debris.schema.json)
+      val manifest = s"""{"schema":$quotedSchema,"files":[{"path":"_data/${pool.getName}/""" +
+        s"""${part.getName}","rows":1,"bytes":${part.length},"statsCols":[],"min":{},"max":{}}]}"""
+      val target =
+        if (phase >= 4) java.nio.file.Paths.get(root, "_manifests", n.toString)
+        else java.nio.file.Paths.get(root, s"_staged-${pool.getName}")
+      Files.createDirectories(target.getParent)
+      Files.write(target, manifest.getBytes("UTF-8"))
+    }
+    if (phase >= 3) {
+      Files.createDirectories(java.nio.file.Paths.get(root, "_claims"))
+      Files.createFile(java.nio.file.Paths.get(root, "_claims", n.toString))
+    }
+    pool
+  }
+
+  private def filesUnder(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap(f => if (f.isDirectory) filesUnder(f) else Seq(f))
+
+  for ((phase, debris) <- Seq(1 -> "a staged _data pool", 2 -> "a _staged-* manifest",
+                              3 -> "a held claim on base+1",
+                              4 -> "a held claim and an unmarked _manifests/base+1"))
+    test(s"a writer that died leaving $debris: readers stay, keyed commits wait for vacuum") {
+      val root = tmpRoot()
+      def rows(): Map[Int, String] = VersionedLayer.read(spark, root).collect()
+        .map(r => r.getInt(0) -> r.getString(1)).toMap
+      def staged(): Set[String] =
+        new java.io.File(root).list().filter(_.startsWith("_staged-")).toSet
+      def pools(): Set[String] = new java.io.File(root, "_data").list().toSet
+      val base = Map(1 -> "a", 2 -> "b")
+      VersionedLayer.write(base.toSeq.toDF("k", "s").coalesce(1), root) shouldBe 1L
+      val dead = crashAt(root, phase, 2L)
+      val holdsClaim = phase >= 3
+      VersionedLayer.latestVersion(spark, root) shouldBe Some(1L)
+      rows() shouldBe base
+      intercept[IllegalStateException](VersionedLayer.read(spark, root, Some(2L)))
+      val delta = Seq((2, "B"), (3, "c")).toDF("k", "s")
+      if (holdsClaim) {
+        // merge may only publish at base+1, which the dead writer holds
+        val (poolsBefore, stagedBefore) = (pools(), staged())
+        val e = intercept[IllegalStateException](VersionedLayer.merge(delta, root, Seq("k")))
+        e.getMessage should include("dangling claim 2")
+        e.getMessage should include("vacuum reclaims it")
+        // every attempt dropped its own pools and staged manifest
+        (pools(), staged()) shouldBe ((poolsBefore, stagedBefore))
+        VersionedLayer.latestVersion(spark, root) shouldBe Some(1L)
+        rows() shouldBe base
+      }
+      VersionedLayer.vacuum(spark, root)
+      VersionedLayer.merge(delta, root, Seq("k")) shouldBe 2L
+      rows() shouldBe Map(1 -> "a", 2 -> "B", 3 -> "c")
+      // vacuum reclaimed the debris: no orphan data file, pool or staged
+      // manifest (writer markers and checksums are not data files)
+      dead.exists() shouldBe false
+      staged() shouldBe empty
+      val referenced = VersionedLayer.committedVersions(spark, root)
+        .flatMap(v => VersionedLayer.dataFiles(spark, root, v)).toSet
+      val rootAbs = new java.io.File(root).getAbsolutePath + "/"
+      filesUnder(new java.io.File(root, "_data"))
+        .map(_.getAbsolutePath.stripPrefix(rootAbs))
+        .filter(_.endsWith(".parquet")).toSet shouldBe referenced
+      pools() shouldBe referenced.map(_.split('/')(1))
+      // a blind write reads no base: it lands past a held claim
+      crashAt(root, phase, 3L)
+      VersionedLayer.write(Seq((7, "w")).toDF("k", "s"), root) shouldBe
+        (if (holdsClaim) 4L else 3L)
+      rows() shouldBe Map(7 -> "w")
+    }
+
   test("concurrent writers serialize onto distinct versions (commit arbitration)") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
@@ -100,13 +183,13 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     val root = tmpRoot()
     VersionedLayer.write(Seq((0, "base")).toDF("k", "s"), root)
     val mergers = 6
-    // merger i upserts the single key i — commuting deltas; plain merge()
-    // racing would let a later commit drop an earlier one (the documented
-    // lost-update anomaly), so EVERY key surviving is the serializability
-    // proof, not just the absence of crashes
+    // merger i upserts the single key i — commuting deltas; a merge that
+    // published past a base it did not read would let a later commit drop
+    // an earlier one (the lost-update anomaly), so EVERY key surviving is
+    // the serializability proof, not just the absence of crashes
     val versions = Await.result(
       Future.sequence((1 to mergers).map(i =>
-        Future(VersionedLayer.mergeSerializable(
+        Future(VersionedLayer.merge(
           Seq((i, s"w$i")).toDF("k", "s"), root, Seq("k"))))),
       5.minutes)
     versions.sorted shouldBe (2L to (mergers + 1).toLong) // dense, in-order log
@@ -125,17 +208,17 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     VersionedLayer.write((0 to 19).map(i => (i, s"v$i")).toDF("k", "s"), root)
     // the q391/q392 + q396 deployment matrix in miniature: a CDC merge
     // stream and a compliance takedown stream racing on ONE layer. Both
-    // sides commit through the pinned-claim loop, so whichever loses the
-    // base+1 CAS re-derives from the winner's snapshot — a delete can
-    // never be undone by a racing merge (the resurrected-takedown
-    // anomaly plain deleteKeys permits), and a merge's rows can never be
-    // dropped by a stale delete derivation. Several rounds to exercise
-    // genuine interleavings, not one lucky ordering.
+    // sides commit at base+1 only, so whichever loses the CAS re-derives
+    // from the winner's snapshot — a delete can never be undone by a
+    // racing merge (the resurrected-takedown anomaly of a commit that
+    // publishes past a base it did not read), and a merge's rows can
+    // never be dropped by a stale delete derivation. Several rounds to
+    // exercise genuine interleavings, not one lucky ordering.
     val rounds = 4
     for (r <- 0 until rounds) {
-      val m = Future(VersionedLayer.mergeSerializable(
+      val m = Future(VersionedLayer.merge(
         Seq((100 + r, s"m$r")).toDF("k", "s"), root, Seq("k")))
-      val d = Future(VersionedLayer.deleteKeysSerializable(
+      val d = Future(VersionedLayer.deleteKeys(
         Seq(r).toDF("k"), root, Seq("k")))
       Await.result(Future.sequence(Seq(m, d)), 5.minutes)
     }
@@ -144,6 +227,28 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
       (1L to (1 + 2 * rounds).toLong)
     val keys = VersionedLayer.read(spark, root).collect().map(_.getInt(0)).toSet
     keys shouldBe ((rounds to 19).toSet ++ (100 until 100 + rounds).toSet)
+  }
+
+  test("racing compact and merge: the merged key survives and the log stays dense") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val root = tmpRoot()
+    VersionedLayer.write((0 until 40).map(i => (i, s"v$i")).toDF("k", "s").repartition(4), root)
+    // compact derives its rewrite from the version it read: a merge that
+    // lands between that read and compact's publish must make compact
+    // re-derive, not be overwritten by a rewrite of the older snapshot
+    val rounds = 4
+    for (r <- 0 until rounds) {
+      val c = Future(VersionedLayer.compact(spark, root, targetFiles = 1))
+      val m = Future(VersionedLayer.merge(
+        Seq((100 + r, s"m$r")).toDF("k", "s"), root, Seq("k")))
+      Await.result(Future.sequence(Seq(c, m)), 5.minutes)
+    }
+    VersionedLayer.committedVersions(spark, root) shouldBe
+      (1L to (1 + 2 * rounds).toLong)
+    VersionedLayer.read(spark, root).collect().map(_.getInt(0)).toSet shouldBe
+      ((0 until 40).toSet ++ (100 until 100 + rounds).toSet)
   }
 
   test("idempotent streaming merge: replayed batch ids apply no second effect") {
@@ -514,7 +619,7 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
       for (i <- 0 until 6) {
         // updates hit keys spread over the pinned version's files, so each
         // cycle rewrites a file the pin still references via sharing
-        VersionedLayer.mergeSerializable(
+        VersionedLayer.merge(
           Seq((i * 23 + 3, s"w$i")).toDF("k", "s"), root, Seq("k"))
         val latest = VersionedLayer.latestVersion(spark, root).get
         VersionedLayer.vacuum(spark, root, keepLast = (latest - pinV + 1).toInt)
@@ -564,11 +669,6 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
     keyLocalLayer(repeated)
     VersionedLayer.deleteKeys(Seq(12, 12, 15, 19, 19).toDF("k"), repeated, Seq("k"))
     snapshot(repeated) shouldBe want
-    val serializable = tmpRoot()
-    keyLocalLayer(serializable)
-    VersionedLayer.deleteKeysSerializable(
-      Seq(12, 12, 15, 19, 19).toDF("k"), serializable, Seq("k"))
-    snapshot(serializable) shouldBe want
   }
 
   test("deleteKeys with a narrower-but-coercible key type (Int keys, Long-keyed table)") {
