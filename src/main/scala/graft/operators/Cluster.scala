@@ -215,8 +215,9 @@ object Cluster extends QueryModule {
     * out-degree under the orientation; at 100 TB the standard hardening is
     * orienting by (degree, id) instead of raw id — bounds out-degree by
     * O(√m) for any power-law graph — an orientation change only, the count
-    * is invariant. Wedges are Σ d(d−1)/2 over symmetrized degrees —
-    * map-side-combined counts, k rows. The (tiny) edge frame is
+    * is invariant. Wedges are Σ d(d−1)/2 and edges Σ d/2 over symmetrized
+    * degrees (each edge adds 2 to the degree sum) — one aggregate over
+    * map-side-combined counts. The (tiny) edge frame is
     * localCheckpointed once so the three self-join legs and the degree scan
     * read materialized rows instead of re-running the upstream pair
     * pipeline. */
@@ -226,11 +227,12 @@ object Cluster extends QueryModule {
       .join(e.as("e2"), col("e2.u") === col("e1.v"))
       .join(e.as("e3"), col("e3.u") === col("e1.u") && col("e3.v") === col("e2.v"))
       .agg(count(lit(1)).as("n_triangles"))
-    val wedges = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
+    val degrees = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      .agg(coalesce((sum(col("d") * (col("d") - 1)) / 2).cast("bigint"), lit(0L))
-        .as("n_wedges"))
-    e.agg(count(lit(1)).as("n_edges")).crossJoin(tri).crossJoin(wedges)
+      .agg(coalesce((sum(col("d")) / 2).cast("bigint"), lit(0L)).as("n_edges"),
+        coalesce((sum(col("d") * (col("d") - 1)) / 2).cast("bigint"), lit(0L))
+          .as("n_wedges"))
+    degrees.crossJoin(tri)
       .select(col("n_edges"), col("n_triangles"), col("n_wedges"),
         round(when(col("n_wedges") === 0, lit(0.0))
           .otherwise(lit(3.0) * col("n_triangles") / col("n_wedges")), 6).as("global_cc"))

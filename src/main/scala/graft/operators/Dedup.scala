@@ -869,10 +869,10 @@ object Dedup extends QueryModule {
     // families) the miss probability is ~6e-5. The oracle is the exact
     // all-pairs SQL at the same threshold; the base fixtures contain no
     // pair above 0.9 (verified, max cosine 0.60 at sf0.1), so the gate row
-    // pins "no false positives" there and the scaled corpora (cross-copy
-    // cosines just under 1) exercise the dense-recall side in ScaleCheck.
-    // A planted high-cosine frame in DedupSimilaritySpec pins exact
-    // recall/precision against brute force.
+    // pins "no false positives" there; q385 (planted copies with cosines
+    // just under 1) gates the dense-recall side. A planted high-cosine
+    // frame in DedupSimilaritySpec pins exact recall/precision against
+    // brute force.
     "q47_embedding_neardup" -> ((s, dir) =>
       embeddingNeardupLsh(s, dir, threshold = 0.9, rowsPerBand = 16, nBands = 6)
         .orderBy(col("id_a"), col("id_b"))),
@@ -889,8 +889,8 @@ object Dedup extends QueryModule {
     // recall miss (a copy pair the banding dropped) hash-fails the round,
     // not just a spec. Tiny perturbations almost never flip a sign bit, so
     // every copy collides with its original in all 6 bands (miss p ~ 6e-5
-    // at this geometry — the q47 doc's 0.999-cosine regime, now under the
-    // driver gate instead of only ScaleCheck).
+    // at this geometry — the q47 doc's 0.999-cosine regime, under the
+    // oracle gate).
     "q385_embedding_neardup_recall" -> ((s, dir) => {
       val base = Tables.read(s, dir, "embeddings")
         .filter(col("vec_id") % 4 === 0)

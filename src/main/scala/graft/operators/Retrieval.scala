@@ -102,20 +102,28 @@ object Retrieval extends QueryModule {
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"), col("rnk"))
   }
 
+  /** Per-document length `(doc_id, dl)`: the document's total term count. */
+  private def docLengths(tf: DataFrame): DataFrame =
+    tf.groupBy(col("doc_id")).agg(sum(col("tf")).cast("double").as("dl"))
+
+  /** BM25's corpus constants from the document lengths, one row `(n, avgdl)`:
+    * every document with a term has one `dl` row, so their count is n. */
+  private def corpusStats(dl: DataFrame): DataFrame =
+    dl.agg(count(col("doc_id")).as("n"), round(avg(col("dl")), 6).as("avgdl"))
+
   /** BM25 score of every document matching any of `terms`, top-`k`. */
   def bm25Search(docsDf: DataFrame, terms: Seq[String], k: Int = 20): DataFrame =
     bm25SearchTf(termFreqs(docsDf), terms, k)
 
   /** [[bm25Search]] over a precomputed term-frequency frame. */
   def bm25SearchTf(tf: DataFrame, terms: Seq[String], k: Int = 20): DataFrame = {
-    val df = docFreqs(tf)
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).cast("double").as("dl"))
-    val stats = tf.agg(countDistinct(col("doc_id")).as("n"))
-      .crossJoin(broadcast(dl.agg(round(avg(col("dl")), 6).as("avgdl"))))
+    val postings = tf.filter(col("term").isin(terms: _*))
+    val dl = docLengths(tf)
+    val stats = corpusStats(dl)
     val idf: Column = log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val norm: Column = col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / col("avgdl"))
-    tf.filter(col("term").isin(terms: _*))
-      .join(df, "term")
+    postings
+      .join(docFreqs(postings), "term")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
       // multiply as idf * (tf * (k1+1)) / norm — the exact association the
@@ -137,9 +145,8 @@ object Retrieval extends QueryModule {
   def evalScored(s: SparkSession, dir: String): DataFrame = {
     val tf = sharedTermFreqs(s, dir)
     val df = docFreqs(tf)
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).cast("double").as("dl"))
-    val stats = tf.agg(countDistinct(col("doc_id")).as("n"))
-      .crossJoin(broadcast(dl.agg(round(avg(col("dl")), 6).as("avgdl"))))
+    val dl = docLengths(tf)
+    val stats = corpusStats(dl)
     val qt = EvalQueries.flatMap { case (qid, ts) =>
       ts.map(t => (qid, t, ts.length.toLong))
     }
@@ -659,10 +666,9 @@ object Retrieval extends QueryModule {
     // posting mass the cap drops (rows the candidate stage never reads),
     // the bounded pair budget Σ C(df,2) over surviving lists, and the
     // distinct candidate pairs actually generated. Run over a replica-
-    // scaled corpus the same numbers reproduce the collapse curve
-    // (ScaleCheck's Retrieval.CosineDfCap sweep); at the driver's gate SF
-    // the row is hash-pinned. One pass over df + the same rare-list explode
-    // as q91 — narrow rows only, no new shuffle shape.
+    // scaled corpus the same numbers reproduce the collapse curve; at the
+    // driver's gate SF the row is hash-pinned. One pass over df + the same
+    // rare-list explode as q91 — narrow rows only, no new shuffle shape.
     "q387_dfcap_coverage" -> ((s, dir) => {
       val cap = CosineDfCap
       val tf = sharedTermFreqs(s, dir)

@@ -65,12 +65,6 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** Sign-bit LSH signature of vector column `v` against `planes`. */
-  def lshSignature(v: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dot(v, litArr(p)) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Banded sign-bit values: planes are grouped `rowsPerBand` at a time and
     * each band's bits pack into one long, yielding an array of
     * `planes.length / rowsPerBand` band values. Two vectors are LSH
@@ -223,13 +217,17 @@ object Similarity extends QueryModule {
   }
 
   /** Every vector of `dir`'s corpus with its seeded cell ([[seededCells]]
-    * against the `kCells` lowest-id centroids) and the `carry` columns —
-    * the blocking layer of the seeded IVF operators. */
+    * against the `kCells` lowest-id centroids) and the `carry` columns of
+    * `(v, label)` — the blocking layer of the seeded IVF operators. The
+    * `(vec_id, cell, v, label)` frame is a session layer, built once per
+    * (dir, kCells) like the PQ codes of the same frozen model; each caller
+    * selects the columns it carries. */
   private def seededAssigned(s: SparkSession, dir: String, kCells: Int,
-                             carry: String*): DataFrame = {
-    val e = emb(s, dir)
-    seededCells(e, seededCentroids(e, kCells), carry: _*)
-  }
+                             carry: String*): DataFrame =
+    SessionLayers.frame(s, "seededCells", dir, kCells) {
+      val e = emb(s, dir)
+      seededCells(e, seededCentroids(e, kCells), "v", "label")
+    }.select(col("vec_id") +: col("cell") +: carry.map(col): _*)
 
   /** SemDeDup (q99) — Abbas et al., "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication" (2023): cluster the embedding
@@ -638,11 +636,13 @@ object Similarity extends QueryModule {
     val assigned = seededAssigned(s, dir, kCells, "v", "label")
     // probe side == corpus, so NO broadcast: the self-join shuffles both
     // sides on the cell key (at real scale kCells ~ √n, the standard IVF
-    // sizing, so the key spreads; AQE may still broadcast at fixture size)
+    // sizing, so the key spreads). The merge hint pins that plan at every
+    // size: without it AQE picks a build side by which query stage
+    // finishes first, and runs alternate between two final plans.
     val probes = assigned
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("cell").as("q_cell"), col("label").as("own_label"))
-    val scored = probes.join(assigned,
+    val scored = probes.join(assigned.hint("merge"),
         col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("own_label"), col("vec_id").as("n_id"),
         col("label").as("n_label"),

@@ -52,10 +52,11 @@ import org.apache.spark.sql.types._
   *      depends on what the snapshot was derived from:
   *      - a commit derived from a base version ([[merge]], [[deleteKeys]],
   *        [[compact]]) may only claim N = base+1. Losing that race means
-  *        another writer published after the base was read, so the writer
-  *        drops what it staged, re-reads the advanced base, re-derives and
-  *        claims again — Delta's conflict check, made exact by the dense
-  *        log ([[serializableCommit]]);
+  *        another writer claimed N after the base was read, so the writer
+  *        waits, re-reads the base and claims again; once the base has
+  *        advanced it drops what it staged and re-derives first — Delta's
+  *        conflict check, made exact by the dense log
+  *        ([[serializableCommit]]);
   *      - a blind [[write]] claims N = (highest claimed-or-committed) + 1.
   *        Losing the race just advances N and retries the (cheap) claim —
   *        blind overwrites commute, so data files and manifest are never
@@ -86,17 +87,12 @@ import org.apache.spark.sql.types._
   * the same deployment constraint every filesystem-log table format has.
   * [[vacuum]] must not run concurrently with writers (it may collect an
   * in-flight writer's staging debris) — the standard retention caveat.
-  * A manifest holds one JSON entry per data file, so its size scales with
-  * the version's file count — MEASURED, not estimated ([[manifestProbe]] /
-  * `graft.ManifestScale`, table in BASELINE.md): ~170 B/entry, 100k files →
-  * ~17 MB manifest, ~113 ms write, ~132 ms read on this host — linear, and
-  * comfortably inside a commit budget to ~100k files per version. Those
-  * figures predate the per-entry `bytes` field, which brings an entry to
-  * ~184 B (10k-entry probe); the latencies were not re-measured with it. Bound
-  * file count operationally with [[compact]] (the same discipline Delta
-  * needs before its parquet checkpoints); past that the successor is
-  * Delta's checkpointed-log shape (same manifest content, columnar
-  * container + incremental tail), not a different algorithm. */
+  * A manifest holds one JSON entry per data file (about 184 B each), so
+  * its size and its write and read time grow linearly with the version's
+  * file count. Bound file count operationally with [[compact]] (the same
+  * discipline Delta needs before its parquet checkpoints); past that the
+  * successor is Delta's checkpointed-log shape (same manifest content,
+  * columnar container + incremental tail), not a different algorithm. */
 object VersionedLayer {
 
   /** Per-file manifest entry: the data file's root-relative path, its row
@@ -936,8 +932,9 @@ object VersionedLayer {
     *     the touched files' rewrite (file pruning applies on every attempt),
     *     with the delta materialized once for all attempts;
     *   - a writer that crashed holding claim base+1 blocks the merge until
-    *     [[vacuum]] clears the claim: after 30 attempts 200 ms apart the
-    *     merge throws a diagnostic naming it.
+    *     [[vacuum]] clears the claim: after 30 attempts 200 ms apart (one
+    *     derivation, since the base never moves) the merge throws a
+    *     diagnostic naming it.
     * A concurrent blind [[write]] never waits: it lands past any held claim,
     * and when it wins the race it supersedes earlier merges by design (it is
     * later in the serial order and replaces the table). */
@@ -958,38 +955,50 @@ object VersionedLayer {
   /** The pinned-claim optimistic-retry loop every derived commit
     * ([[merge]], [[deleteKeys]], [[compact]]) publishes through: derive a
     * snapshot from the CURRENT base, try to publish at exactly base+1 (the
-    * claim CAS arbitrates), on a lost race drop the attempt's staged pools,
-    * wait for the winner's marker, and re-derive from the advanced base.
+    * claim CAS arbitrates), on a lost race wait for the winner's marker and
+    * try again. The derivation is kept while the base stays the same (a
+    * claim not yet published, or held by a crashed writer, leaves nothing
+    * new to derive from); when the base has moved its staged pools are
+    * dropped and the snapshot is re-derived from the advanced base.
     * Versions therefore commit densely and in order, which is what makes
     * "my base is the latest commit" a serializability proof: when this
     * writer owns claim base+1 and base is the newest commit marker, no
     * unseen commit can slot between them. Liveness is bounded, not
     * unconditional (the same trade every filesystem-log format makes): a
     * claim owner that died before publishing holds base+1 hostage, and the
-    * loop gives up after [[DerivedCommitAttempts]] with a diagnosis naming
-    * the dangling claim ([[vacuum]] collects it). `derive` receives the
-    * base version (None = empty layer) and returns the staged manifest plus
-    * the pools it staged (empty when the derivation staged nothing — a
-    * no-op delete carries every file by reference). */
+    * loop gives up after [[DerivedCommitAttempts]], drops its pools and
+    * throws a diagnosis naming the dangling claim ([[vacuum]] collects it).
+    * `derive` receives the base version (None = empty layer) and returns
+    * the staged manifest plus the pools it staged (empty when the
+    * derivation staged nothing — a no-op delete carries every file by
+    * reference). */
   private def serializableCommit(spark: SparkSession, root: String, what: String)
                                 (derive: Option[Long] => (Manifest, Seq[Path])): Long = {
     val f = fs(spark, root)
+    def drop(pools: Seq[Path]): Unit = pools.foreach(p => f.delete(p, true))
     var attempts = 0
     var won: Option[Long] = None
+    var derived: Option[(Option[Long], Manifest, Seq[Path])] = None
     while (won.isEmpty && attempts < DerivedCommitAttempts) {
       val base = latestVersion(spark, root)
-      val (man, pools) = derive(base)
+      val man = derived match {
+        case Some((b, m, _)) if b == base => m
+        case stale =>
+          stale.foreach(d => drop(d._3))
+          val (m, pools) = derive(base)
+          derived = Some((base, m, pools))
+          m
+      }
       won = publish(spark, root, man, Some(base.getOrElse(0L) + 1))
       if (won.isEmpty) {
-        // lost the claim: another writer owns base+1. Drop our staged
-        // pools, give the winner a beat to publish, re-derive from the
-        // moved base.
-        pools.foreach(p => f.delete(p, true))
+        // lost the claim: another writer owns base+1. Give the winner a
+        // beat to publish; the next attempt re-derives if the base moved.
         if (latestVersion(spark, root).getOrElse(0L) < base.getOrElse(0L) + 1)
           Thread.sleep(LostRaceWaitMs)
         attempts += 1
       }
     }
+    if (won.isEmpty) derived.foreach(d => drop(d._3))
     won.getOrElse(throw new IllegalStateException(
       s"$what lost the commit race $DerivedCommitAttempts times under $root; " +
         s"if no concurrent writer is live, a crashed writer's dangling claim " +
@@ -1257,41 +1266,6 @@ object VersionedLayer {
         pruneEmptyDirs(f, pool.getPath)
         ()
       }
-  }
-
-  /** Dev probe ([[graft.ManifestScale]]): synthesize a `files`-entry
-    * manifest through the PRODUCTION JSON writer/reader and report
-    * (manifestBytes, writeMs, readMs) — the measured cost curve behind the
-    * documented operational bound that a version's manifest is one
-    * driver-side JSON scaling with its file count. Write ≈ the commit
-    * path's stage step (publish adds two namespace ops); read ≈ every
-    * snapshot resolution. Entries mimic a key-sorted index layout
-    * (disjoint 8-byte-key ranges over one stats column, 4 MiB files), with
-    * every field a staged entry carries. */
-  private[graft] def manifestProbe(spark: SparkSession, root: String,
-                                   files: Int): (Long, Long, Long) = {
-    val f = fs(spark, root)
-    f.mkdirs(manifestDir(root))
-    val schema = StructType(Seq("doc_id", "band_id", "b0", "b1", "b2", "b3")
-      .map(n => StructField(n, LongType)))
-    val entries = (0 until files).map { i =>
-      FileMeta(f"_data/00000000-0000-0000-0000-000000000000/part-$i%05d.parquet",
-        100000L, Seq("doc_id"),
-        Map("doc_id" -> (i * 100000L).toString),
-        Map("doc_id" -> ((i + 1) * 100000L - 1).toString),
-        Map.empty, 4L * 1024 * 1024)
-    }
-    val p = new Path(manifestDir(root), "1")
-    if (f.exists(p)) f.delete(p, false)
-    val t0 = System.nanoTime()
-    writeManifestFile(f, p, Manifest(schema, entries))
-    val writeMs = (System.nanoTime() - t0) / 1000000
-    val bytes = f.getFileStatus(p).getLen
-    val t1 = System.nanoTime()
-    val back = readManifest(spark, root, 1L)
-    val readMs = (System.nanoTime() - t1) / 1000000
-    require(back.files.size == files, "manifest probe round-trip lost entries")
-    (bytes, writeMs, readMs)
   }
 
   /** Delete directories left empty by vacuumed files (partition dirs, then

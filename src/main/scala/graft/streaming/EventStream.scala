@@ -189,84 +189,10 @@ object EventStream {
       }
   }
 
-  /** Run metrics of the most recent completed streaming run: memory-sink
-    * name, total input rows across micro-batches, and the MAX state-store
-    * rows any micro-batch held. This is the state-boundedness evidence the
-    * scaling harness reads (the 100 TB claim for every stateful stream here
-    * is "state ∝ watermark-live keys/windows, never ∝ history", and
-    * numRowsTotal across a scaled replay is the measurement of it).
-    * Streams in this engine run strictly one-at-a-time (Verify / Bench /
-    * specs are sequential), so a volatile slot is race-free. */
-  final case class StreamRunMetrics(sink: String, inputRows: Long,
-                                    maxStateRows: Long, numBatches: Int)
-  @volatile var lastRunMetrics: Option[StreamRunMetrics] = None
-
-  /** Per-run metric accumulator fed by a StreamingQueryListener. The former
-    * implementation summed `q.recentProgress`, which is a RING BUFFER capped
-    * by spark.sql.streaming.numRecentProgressUpdates (default 100): any run
-    * with more micro-batches (exactly the maxFilesPerTrigger scaled replays
-    * StreamScaleCheck measures) silently undercounted inputRows/numBatches
-    * and could miss the true max state rows. The listener sees EVERY
-    * progress event regardless of batch count. */
-  private final class RunAcc {
-    var inputRows: Long = 0L
-    var maxStateRows: Long = 0L
-    var numBatches: Int = 0
-    @volatile var terminated: Boolean = false
-  }
-  private val runAccs =
-    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, RunAcc]()
-  private object MetricsListener
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      runAccs.put(e.runId, new RunAcc)
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val p = e.progress
-      val a = runAccs.computeIfAbsent(p.runId, _ => new RunAcc)
-      a.synchronized {
-        a.inputRows += p.numInputRows
-        a.maxStateRows = math.max(a.maxStateRows,
-          p.stateOperators.map(_.numRowsTotal).foldLeft(0L)(math.max))
-        a.numBatches += 1
-      }
-    }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-      Option(runAccs.get(e.runId)).foreach(_.terminated = true)
-  }
-  // One listener per StreamingQueryManager (per session); idempotent.
-  private val listenerRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-  private def ensureMetricsListener(spark: SparkSession): Unit =
-    if (listenerRegistered.add(System.identityHashCode(spark.streams)))
-      spark.streams.addListener(MetricsListener)
-
-  private def recordMetrics(q: org.apache.spark.sql.streaming.StreamingQuery,
-                            sink: String): Unit = {
-    // Listener events post asynchronously; the run has already terminated
-    // (awaitTermination returned), so wait briefly for the terminated event
-    // to confirm every progress event for this runId has been delivered.
-    val acc = Option(runAccs.get(q.runId))
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (acc.exists(a => !a.terminated) && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    lastRunMetrics = acc.map { a =>
-      runAccs.remove(q.runId)
-      a.synchronized(StreamRunMetrics(sink, a.inputRows, a.maxStateRows, a.numBatches))
-    }.orElse {
-      // Listener never saw the run (shouldn't happen) — degrade to the old
-      // capped recentProgress summary rather than reporting nothing.
-      val progs = q.recentProgress
-      Some(StreamRunMetrics(sink, progs.map(_.numInputRows).sum,
-        progs.flatMap(_.stateOperators.map(_.numRowsTotal)).foldLeft(0L)(math.max),
-        progs.length))
-    }
-  }
-
-  /** Checkpoint root for the harness's run-once streams, in the default
-    * temp dir, deleted after termination (the checkpoint of an AvailableNow
-    * run-once query is transient by design; the harness's streams restart
-    * from scratch every invocation). Production deployments point
+  /** Checkpoint root for the run-once streams, in the default temp dir,
+    * deleted after termination (the checkpoint of an AvailableNow run-once
+    * query is transient by design; these streams restart from scratch
+    * every invocation). Production deployments point
     * checkpointLocation at durable storage. A tmpfs root buys nothing
     * measurable: four alternating graft.Bench pairs at sf0.1 on a 4-core
     * host (median of min-of-5) gave q384 4.27 s on /dev/shm against 4.23 s
@@ -316,14 +242,13 @@ object EventStream {
     *    which is only safe because streams here run one-at-a-time — the
     *    assert makes a future concurrent caller fail loudly instead of
     *    silently losing handles. */
-  private def runOnce(df: DataFrame, name: String, statePartitions: Int)(
+  private def runOnce(df: DataFrame, statePartitions: Int)(
       configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
         => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
     val spark = df.sparkSession
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     if (statePartitions > 0) spark.conf.set(key, statePartitions.toString)
-    ensureMetricsListener(spark)
     val ckpt = transientCheckpointDir()
     try {
       val q = configure(df.writeStream).option("checkpointLocation", ckpt.toString)
@@ -338,7 +263,6 @@ object EventStream {
           try q.stop() catch { case _: Throwable => () }
           throw t
       }
-      recordMetrics(q, name)
       assertNoActiveStreams(spark)
       spark.streams.resetTerminated()
     } finally {
@@ -351,7 +275,7 @@ object EventStream {
     * all data currently available, then stop. Lifecycle: [[runOnce]]. */
   def runOnceToMemory(agg: DataFrame, tableName: String,
                       statePartitions: Int = 8): Unit =
-    runOnce(agg, tableName, statePartitions)(
+    runOnce(agg, statePartitions)(
       _.format("memory").queryName(tableName).outputMode(OutputMode.Complete()))
 
   /** foreachBatch twin of [[runOnceAppendToMemory]] for streaming
@@ -363,7 +287,7 @@ object EventStream {
   def runOnceForeachBatch(df: DataFrame, name: String,
                           fn: (DataFrame, Long) => Unit,
                           statePartitions: Int = 8): Unit =
-    runOnce(df, name, statePartitions)(_.queryName(name).foreachBatch(fn))
+    runOnce(df, statePartitions)(_.queryName(name).foreachBatch(fn))
 
   /** Append-mode twin of [[runOnceToMemory]] for stateful pipelines whose
     * rows are final the moment they are emitted (dedup pass-through, closed
@@ -374,7 +298,7 @@ object EventStream {
   def runOnceAppendToMemory(df: DataFrame, tableName: String,
                             maxFilesPerTrigger: Int = 0,
                             statePartitions: Int = 8): Unit =
-    runOnce(df, tableName, statePartitions) { w0 =>
+    runOnce(df, statePartitions) { w0 =>
       val w = w0.format("memory").queryName(tableName)
         .outputMode(OutputMode.Append())
       if (maxFilesPerTrigger > 0)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Cluster
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -10,7 +9,7 @@ import org.scalatest.matchers.should.Matchers
   * matter at scale: logarithmic round count on high-diameter graphs, a
   * constant number of jobs per round and an all-equi-join plan. */
 class ClusterSpec extends AnyFunSuite with Matchers {
-  import TestSpark.{spark, sf0001}
+  import TestSpark.{spark, sf0001, jobsOf}
 
   private def cc(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     import spark.implicits._
@@ -38,33 +37,6 @@ class ClusterSpec extends AnyFunSuite with Matchers {
     (for (i <- 0L to 3L; j <- (i + 1) to 3L) yield (i, j)) ++
       (for (i <- 10L to 13L; j <- (i + 1) to 13L) yield (i, j)) :+ ((3L, 10L))
   private val chain = (0L until 63L).map(i => (i, i + 1))
-
-  /** `body`'s result and the Spark jobs it started, counted by a job tag.
-    * The listener bus delivers events in order, so once a marker job's
-    * start is seen every earlier job of `body` has been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"cc-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val tags = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .fold(Set.empty[String])(_.split(",").toSet)
-        if (tags(tag)) jobs.incrementAndGet()
-        if (tags(tag + "-end")) marker.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(tag)
-      val r = try body finally sc.removeJobTag(tag)
-      sc.addJobTag(tag + "-end")
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(tag + "-end")
-      marker.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      (r, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Seeded random multigraph on `n` nodes with duplicate, reversed and
     * self-loop edges planted among `m` random ones. */

@@ -12,7 +12,7 @@ import org.scalatest.matchers.should.Matchers
   * it again. A re-run of one plan must also generate the same classes,
   * whatever ids AQE gives its stages. */
 class CodegenCacheSpec extends AnyFunSuite with Matchers {
-  import TestSpark.{spark, sf0001}
+  import TestSpark.{spark, sf0001, planShape}
 
   private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -48,40 +48,28 @@ class CodegenCacheSpec extends AnyFunSuite with Matchers {
     (compiles() - before) shouldBe 0L
   }
 
-  /** The final plan of an executed query with the ids that differ between
-    * runs of one plan (expression, codegen stage, query stage, exchange
-    * and lambda variable ids) blanked out. */
-  private def shape(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
-      .replaceAll("#\\d+", "#")
-      .replaceAll("\\*\\(\\d+\\)", "*()")
-      .replaceAll("plan_id=\\d+", "plan_id=")
-      .replaceAll("QueryStage \\d+", "QueryStage")
-      .replaceAll("lambda x_\\d+", "lambda x_")
+  /** Run `q` and return its id-blanked final plan. */
+  private def runShape(q: String): String = {
+    val df = SparkEntry.queries(q)(spark, sf0001)
+    df.collect()
+    planShape(df)
+  }
 
   test("a re-run of an already-compiled plan compiles nothing") {
     // AQE numbers codegen stages anew on every run, and with the stage id in
-    // the class name q79's re-runs compiled 2-8 classes each. q216's join
-    // build side depends on which query stage finishes first, so it has
-    // two final plans; only a re-run of a plan seen before must hit.
-    Seq("q79_bm25_search", "q216_label_noise").foreach { q =>
-      def runShape(): String = {
-        val df = SparkEntry.queries(q)(spark, sf0001)
-        df.collect()
-        shape(df)
-      }
-      val seen = scala.collection.mutable.Set(runShape())
-      var checked = 0
-      (1 to 3).foreach { i =>
+    // the class name q79's re-runs compiled 2-8 classes each. Each query
+    // has one final plan, so every re-run repeats it and compiles nothing;
+    // q216's seven re-runs also show that its self-join no longer picks a
+    // build side by which query stage finishes first.
+    Seq("q79_bm25_search" -> 3, "q216_label_noise" -> 7).foreach { case (q, reruns) =>
+      val first = runShape(q)
+      (1 to reruns).foreach { i =>
         val before = compiles()
-        val s = runShape()
-        if (seen(s)) {
-          withClue(s"$q re-run $i: ") { (compiles() - before) shouldBe 0L }
-          checked += 1
+        withClue(s"$q re-run $i: ") {
+          runShape(q) shouldBe first
+          (compiles() - before) shouldBe 0L
         }
-        seen += s
       }
-      withClue(s"$q: no re-run repeated a plan: ") { checked should be > 0 }
     }
   }
 }

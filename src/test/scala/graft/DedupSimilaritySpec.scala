@@ -115,8 +115,8 @@ class DedupSimilaritySpec extends AnyFunSuite with Matchers {
   }
 
   test("noEdgeCache bypass recomputes the seeded ANN pipelines with identical results") {
-    // ScaleCheck's contract: -Dgraft.noEdgeCache=1 must time the REAL
-    // pipeline (no checkpointed codes/models) and change nothing else
+    // -Dgraft.noEdgeCache=1 must run the REAL pipeline (no checkpointed
+    // codes/models) and change nothing else
     val cachedIvf = Similarity.annIvfSeeded(spark, sf0001, 5).collect().map(_.toSeq).toSeq
     val cachedPq = Similarity.annPqAdcSeeded(spark, sf0001, 5).collect().map(_.toSeq).toSeq
     sys.props("graft.noEdgeCache") = "1"

@@ -6,10 +6,10 @@ import org.scalatest.matchers.should.Matchers
 /** Session model/silver-layer dir isolation — the invariant every
   * [[SessionLayers]] layer (Dedup pair counts, MinHash candidates,
   * Retrieval term freqs, TextAnalytics NB scores, Similarity seeded codes,
-  * dominant direction and Gram cells, Scrub winnow fingerprints, Cluster
-  * entity labels) must hold: keys carry (session, dir, params), so two
-  * different fixture dirs queried in ONE session must never cross-serve
-  * each other's materialization. ScaleCheck bypasses the caches wholesale (`-Dgraft.noEdgeCache=1`); this spec pins
+  * seeded cells, dominant direction and Gram cells, Scrub winnow
+  * fingerprints, Cluster entity labels) must hold: keys carry (session,
+  * dir, params), so two different fixture dirs queried in ONE session must
+  * never cross-serve each other's materialization. This spec pins
   * the registry-level invariant for ordinary use by warming each layer on
   * one dir, querying a second dir through the warm cache, and comparing
   * against a cache-bypassed fresh compute of the second dir. A stale-serve
@@ -37,7 +37,7 @@ class ModelLayerIsolationSpec extends AnyFunSuite with Matchers {
     "q102_nb_langid",         // TextAnalytics.sharedNbScored
     "q74_winnow_fingerprints", // Scrub.sharedWinnowed
     "q217_entity_clusters",    // Cluster.sharedEntityLabels
-    "q40_ann_ivf",             // seeded IVF: cells come straight from the corpus, no layer
+    "q40_ann_ivf",             // Similarity seeded cells frame
     "q108_pq_adc",             // Similarity seeded PQ seed vectors + codes frame
     "q207_dominant_direction", // Similarity.sharedDominantDirection
     "q336_top_eigen"           // Similarity Gram cells

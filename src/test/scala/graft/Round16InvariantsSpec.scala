@@ -103,23 +103,22 @@ class Round16InvariantsSpec extends AnyFunSuite with Matchers {
     // q197 (windowed agg): state rows = the (hour-window × type) grid —
     // equal to the emitted grid and far below the event count. This is the
     // measurable form of the 100 TB claim: arrivals scale the INPUT, the
-    // calendar scales the STATE. StreamScaleCheck replays the same
-    // measurement over the 2x/4x/8x fixed-calendar corpora.
+    // calendar scales the STATE.
     val grid = SparkEntry.queries("q197_stream_batch_equiv")(spark, sf0001).count()
-    val m = streaming.EventStream.lastRunMetrics.get
+    val m = TestSpark.lastStreamRun()
     val ev = graft.sources.Tables.read(spark, sf0001, "events")
     m.inputRows shouldBe ev.count()
     m.maxStateRows should be <= grid
     // the grid IS the batch-side distinct (hour, type) surface — state can
     // never exceed what the calendar×type product admits (at sf0.001 events
     // are sparse, ~1/window, so the DENSITY claim — input grows, grid
-    // doesn't — is the scaled-corpus measurement StreamScaleCheck makes)
+    // doesn't — needs a corpus with more events per window than this one)
     grid shouldBe ev.select(date_trunc("hour", col("ts")), col("event_type"))
       .distinct().count()
     // q199 (flatMapGroupsWithState sessionizer): at most one open session
     // per live key — users + the sentinel — regardless of event volume.
     SparkEntry.queries("q199_stream_session_equiv")(spark, sf0001).count()
-    val m199 = streaming.EventStream.lastRunMetrics.get
+    val m199 = TestSpark.lastStreamRun()
     val users = graft.sources.Tables.read(spark, sf0001, "events")
       .select(col("user_id")).distinct().count()
     m199.maxStateRows should be <= users + 1
@@ -307,7 +306,7 @@ class Round16InvariantsSpec extends AnyFunSuite with Matchers {
   test("q379: the streaming HLL's state is registers-per-window, and errors sit in the m=64 regime") {
     val r = SparkEntry.queries("q379_stream_hll")(spark, sf0001).collect()
     r should not be empty
-    val m = streaming.EventStream.lastRunMetrics.get
+    val m = TestSpark.lastStreamRun()
     // state = at most 64 registers per open hour window — never ∝ users
     m.maxStateRows should be <= 64L * r.length
     r.foreach { row =>

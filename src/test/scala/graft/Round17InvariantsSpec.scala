@@ -97,7 +97,7 @@ class Round17InvariantsSpec extends AnyFunSuite with Matchers {
   test("q384: streaming CMS state is cells-per-window and the sketch never undercounts") {
     val r = SparkEntry.queries("q384_stream_cms_topk")(spark, sf0001).collect()
     r should not be empty
-    val m = streaming.EventStream.lastRunMetrics.get
+    val m = TestSpark.lastStreamRun()
     // state = at most 4×256 register cells per open hour window — never
     // ∝ the user population (the q379 boundedness claim, for frequency)
     val hours = r.map(_.getAs[Long]("unix_hour")).distinct.length

@@ -123,7 +123,7 @@ class Round18InvariantsSpec extends AnyFunSuite with Matchers {
       // four staged files -> four micro-batch merges on top of the standing write
       VersionedLayer.committedVersions(spark, root).size shouldBe 5
       // the stream carries NO state: foreachBatch append, no watermark ops
-      val m = streaming.EventStream.lastRunMetrics.get
+      val m = TestSpark.lastStreamRun()
       m.sink shouldBe "q391spec"
       m.maxStateRows shouldBe 0L
       m.numBatches should be >= 4
@@ -171,7 +171,7 @@ class Round18InvariantsSpec extends AnyFunSuite with Matchers {
     // the streaming path (four exactly-once merges) converges to the
     // scratch rebuild, and the stream itself carries no state
     val maintained = SparkEntry.queries("q392_stream_ann_index_maintenance")(spark, sf0001)
-    val m = streaming.EventStream.lastRunMetrics.get
+    val m = TestSpark.lastStreamRun()
     m.sink shouldBe "q392_maint"
     m.maxStateRows shouldBe 0L
     m.numBatches should be >= 4
@@ -245,7 +245,7 @@ class Round18InvariantsSpec extends AnyFunSuite with Matchers {
     // bounded-state evidence: the ONLY streaming state is the watermark-live
     // (arr_id, ref_id) dedup entries — one per flagged pair inside the
     // horizon, never ∝ corpus size or stream history
-    val m = streaming.EventStream.lastRunMetrics.get
+    val m = TestSpark.lastStreamRun()
     m.sink should startWith("q388_sink")
     m.maxStateRows should be <= r.length.toLong
   }

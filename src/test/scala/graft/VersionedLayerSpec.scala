@@ -147,6 +147,22 @@ class VersionedLayerSpec extends AnyFunSuite with Matchers {
       rows() shouldBe Map(7 -> "w")
     }
 
+  test("a merge behind a held claim derives once: as many jobs as the merge that lands") {
+    val root = tmpRoot()
+    VersionedLayer.write(Seq((1, "a"), (2, "b")).toDF("k", "s").coalesce(1), root) shouldBe 1L
+    crashAt(root, 3, 2L)
+    val delta = Seq((2, "B"), (3, "c")).toDF("k", "s")
+    // the base never moves behind the dead claim, so every attempt after the
+    // first reuses the staged snapshot and only retries the claim
+    val (_, blocked) = TestSpark.jobsOf(
+      intercept[IllegalStateException](VersionedLayer.merge(delta, root, Seq("k"))))
+    VersionedLayer.vacuum(spark, root)
+    val (v, landed) = TestSpark.jobsOf(VersionedLayer.merge(delta, root, Seq("k")))
+    v shouldBe 2L
+    landed should be > 0
+    blocked shouldBe landed
+  }
+
   test("concurrent writers serialize onto distinct versions (commit arbitration)") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
