@@ -8,9 +8,11 @@ oracle in OUTDIR/oracle_sql.json, runs the oracle in DuckDB over the same
 fixture tables and compares: column names (sorted), row count, and exact cell
 values (floats compared bit-for-bit, then with 1e-9 tolerance reported
 separately). This mirrors the driver's hash-match gate so mismatches surface
-before the round's CORRECTNESS run. Not part of the engine; dev tooling only.
+before the round's CORRECTNESS run. After the summary it prints the five
+slowest oracles with their DuckDB seconds. Not part of the engine; dev
+tooling only.
 """
-import json, math, sys
+import json, math, sys, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -64,14 +66,18 @@ def main(sfdir, outdir):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    oracle_s = {}
     for name in sorted(oracles):
         sql = oracles[name]
+        t0 = time.perf_counter()
         try:
             exp = con.execute(sql).df()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}")
             n_fail += 1
             continue
+        finally:
+            oracle_s[name] = time.perf_counter() - t0
         try:
             got = con.execute(
                 f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
@@ -121,6 +127,9 @@ def main(sfdir, outdir):
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
     print(f"\n{n_pass} exact-pass / {n_pass + n_fail} oracled queries")
+    print("slowest oracles:")
+    for name, secs in sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]:
+        print(f"  {secs:8.2f} s  {name}")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

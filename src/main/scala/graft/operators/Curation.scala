@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryModule
-import graft.sources.Tables
+import graft.sources.{Tables, TempRoots}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -602,21 +602,17 @@ object Curation extends QueryModule {
     // index broadcasts into the left join against the standing index (AQE
     // decides), the merge's anti-join is the only pass over the big index,
     // and nothing ever re-fingerprints the standing corpus.
-    "q383_dedup_index_cdc" -> ((s, dir) => {
+    "q383_dedup_index_cdc" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q383_dedup_idx")
-      val root = rootPath.toString
-      try {
-        val d = docs(s, dir)
-        VersionedLayer.write(dedupIndexOf(d.filter(col("doc_id") % 10 =!= 0)), root)
-        val delta = dedupIndexDelta(
-          dedupIndexOf(d.filter(col("doc_id") % 10 === 0)),
-          VersionedLayer.read(s, root))
-        VersionedLayer.merge(delta, root, Seq("fp"))
-        VersionedLayer.read(s, root)
-          .orderBy(col("fp"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q383_dedup_idx").toString
+      val d = docs(s, dir)
+      VersionedLayer.write(dedupIndexOf(d.filter(col("doc_id") % 10 =!= 0)), root)
+      val delta = dedupIndexDelta(
+        dedupIndexOf(d.filter(col("doc_id") % 10 === 0)),
+        VersionedLayer.read(s, root))
+      VersionedLayer.merge(delta, root, Seq("fp"))
+      VersionedLayer.read(s, root)
+        .orderBy(col("fp"))
     }),
 
     "q88_source_cap" -> ((s, dir) =>

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, SessionLayers}
-import graft.sources.Tables
+import graft.sources.{Tables, TempRoots}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -736,30 +736,26 @@ object Dedup extends QueryModule {
     // narrow (doc_id, band_id) keys is the only pass over the big index,
     // and at 25 B docs the nightly delta is 8 × batch rows ≈ 100 GB vs a
     // 10 TB standing index that is read, never re-banded.
-    "q389_lsh_index_cdc" -> ((s, dir) => {
+    "q389_lsh_index_cdc" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q389_lsh_idx")
-      val root = rootPath.toString
-      try {
-        // One shingle+signature pass serves both slices (q386's discipline:
-        // band rows are per-document, so split-after-encode is row-identical
-        // to encoding each slice separately — production bands ONLY the
-        // arriving batch; here the standing build is part of the measured
-        // run anyway, so sharing the pass just avoids a second corpus scan).
-        // the standing index is persisted hive-layouted by band (the shape
-        // q200's deployment probe wants: a single-band admission probe
-        // partition-prunes 7/8 of the index at the manifest, spec-pinned in
-        // VersionedLayerSpec); the CDC merge preserves the layout, so
-        // nightly maintenance never erodes the probe path
-        val idx = lshIndexRows(docs(s, dir)).localCheckpoint()
-        VersionedLayer.write(idx.filter(!(col("doc_id") % 10 === 7)), root,
-          layoutBy = Seq("band_id"))
-        VersionedLayer.merge(idx.filter(col("doc_id") % 10 === 7),
-          root, Seq("doc_id", "band_id"))
-        VersionedLayer.read(s, root)
-          .orderBy(col("doc_id"), col("band_id"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q389_lsh_idx").toString
+      // One shingle+signature pass serves both slices (q386's discipline:
+      // band rows are per-document, so split-after-encode is row-identical
+      // to encoding each slice separately — production bands ONLY the
+      // arriving batch; here the standing build is part of the measured
+      // run anyway, so sharing the pass just avoids a second corpus scan).
+      // the standing index is persisted hive-layouted by band (the shape
+      // q200's deployment probe wants: a single-band admission probe
+      // partition-prunes 7/8 of the index at the manifest, spec-pinned in
+      // VersionedLayerSpec); the CDC merge preserves the layout, so
+      // nightly maintenance never erodes the probe path
+      val idx = lshIndexRows(docs(s, dir)).localCheckpoint()
+      VersionedLayer.write(idx.filter(!(col("doc_id") % 10 === 7)), root,
+        layoutBy = Seq("band_id"))
+      VersionedLayer.merge(idx.filter(col("doc_id") % 10 === 7),
+        root, Seq("doc_id", "band_id"))
+      VersionedLayer.read(s, root)
+        .orderBy(col("doc_id"), col("band_id"))
     }),
 
     // Index-lifecycle audit (q390) — the nightly maintenance cadence END TO
@@ -774,27 +770,23 @@ object Dedup extends QueryModule {
     // or vacuum that loses or duplicates even ONE index row breaks the hash
     // — the data-preservation proof for the maintenance operations
     // themselves, which q383/q386/q389 assume but never exercise.
-    "q390_index_lifecycle" -> ((s, dir) => {
+    "q390_index_lifecycle" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q390_lsh_life")
-      val root = rootPath.toString
-      try {
-        val idx = lshIndexRows(docs(s, dir)).localCheckpoint()
-        VersionedLayer.write(idx.filter(col("doc_id") % 10 <= 6), root)
-        for (b <- 7 to 9)
-          VersionedLayer.merge(idx.filter(col("doc_id") % 10 === b),
-            root, Seq("doc_id", "band_id"))
-        VersionedLayer.compact(s, root, targetFiles = 2)
-        VersionedLayer.vacuum(s, root, keepLast = 1)
-        VersionedLayer.read(s, root)
-          .groupBy(col("band_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-          .agg(count(lit(1)).as("n"))
-          .groupBy(col("band_id"))
-          .agg(sum(col("n")).as("n_docs"), count(lit(1)).as("n_buckets"),
-            max(col("n")).as("max_bucket"))
-          .orderBy(col("band_id"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q390_lsh_life").toString
+      val idx = lshIndexRows(docs(s, dir)).localCheckpoint()
+      VersionedLayer.write(idx.filter(col("doc_id") % 10 <= 6), root)
+      for (b <- 7 to 9)
+        VersionedLayer.merge(idx.filter(col("doc_id") % 10 === b),
+          root, Seq("doc_id", "band_id"))
+      VersionedLayer.compact(s, root, targetFiles = 2)
+      VersionedLayer.vacuum(s, root, keepLast = 1)
+      VersionedLayer.read(s, root)
+        .groupBy(col("band_id"), col("b0"), col("b1"), col("b2"), col("b3"))
+        .agg(count(lit(1)).as("n"))
+        .groupBy(col("band_id"))
+        .agg(sum(col("n")).as("n_docs"), count(lit(1)).as("n_buckets"),
+          max(col("n")).as("max_bucket"))
+        .orderBy(col("band_id"))
     }),
 
     // Index takedown (q394) — the COMPLIANCE leg of the maintenance matrix:
@@ -813,22 +805,18 @@ object Dedup extends QueryModule {
     // docs — hash equality proves the delete removed exactly the requested
     // documents' rows and nothing else (band rows are per-document, so
     // post-filtering the rebuild is the exact expected state).
-    "q394_index_takedown" -> ((s, dir) => {
+    "q394_index_takedown" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q394_takedown")
-      val root = rootPath.toString
-      try {
-        val d = docs(s, dir)
-        val idx = lshIndexRows(d).localCheckpoint()
-        VersionedLayer.write(idx, root)
-        VersionedLayer.compact(s, root, targetFiles = 4, sortBy = Seq("doc_id"))
-        VersionedLayer.deleteKeys(
-          d.filter(col("doc_id") % 13 === 5).select(col("doc_id")),
-          root, Seq("doc_id"))
-        VersionedLayer.read(s, root)
-          .orderBy(col("doc_id"), col("band_id"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q394_takedown").toString
+      val d = docs(s, dir)
+      val idx = lshIndexRows(d).localCheckpoint()
+      VersionedLayer.write(idx, root)
+      VersionedLayer.compact(s, root, targetFiles = 4, sortBy = Seq("doc_id"))
+      VersionedLayer.deleteKeys(
+        d.filter(col("doc_id") % 13 === 5).select(col("doc_id")),
+        root, Seq("doc_id"))
+      VersionedLayer.read(s, root)
+        .orderBy(col("doc_id"), col("band_id"))
     }),
 
     // SimHash signatures.

@@ -3,7 +3,7 @@ package graft.operators
 import graft.QueryModule
 import graft.functions.ExactAgg._
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DecimalType, LongType}
@@ -26,6 +26,75 @@ import org.apache.spark.sql.types.{DateType, DecimalType, LongType}
 object EventAnalytics extends QueryModule {
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.read(s, dir, "events")
+
+  /** A user's experiment arm, md5(user_id || ':ab') % 2: a salted hash, so
+    * assignment is stable under re-runs, appends and re-partitioning. */
+  private def abArm: Column = expr(
+    "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
+
+  /** Censored time to conversion, one row per user with a view: `days` from
+    * the first view to the first purchase at or after it (`event` = 1), or
+    * to the corpus horizon for users who never convert (`event` = 0,
+    * right-censored). Whole days by exact integer epoch-second division.
+    * With `byArm` each row leads with the user's [[abArm]]. */
+  private def timeToConversion(e: DataFrame, byArm: Boolean): DataFrame = {
+    val firstView = e.filter(col("event_type") === "view")
+      .groupBy(col("user_id")).agg(min(col("ts").cast(LongType)).as("fv"))
+    val fv = if (byArm) firstView.select(col("user_id"), abArm.as("arm"), col("fv"))
+      else firstView
+    val fp = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").cast(LongType).as("pt"))
+      .join(fv.select(col("user_id"), col("fv")), Seq("user_id"))
+      .filter(col("pt") >= col("fv"))
+      .groupBy(col("user_id")).agg(min(col("pt")).as("fp"))
+    val mx = e.agg(max(col("ts").cast(LongType)).as("mx"))
+    val keys = if (byArm) Seq(col("arm")) else Nil
+    fv.join(fp, Seq("user_id"), "left").crossJoin(broadcast(mx))
+      .select(keys ++ Seq(
+        when(col("fp").isNotNull, expr("(fp - fv) div 86400"))
+          .otherwise(expr("(mx - fv) div 86400")).as("days"),
+        when(col("fp").isNotNull, 1L).otherwise(0L).as("event")): _*)
+  }
+
+  /** Kaplan–Meier over a [[timeToConversion]] frame, per `keys` and
+    * conversion day: `n_risk` (observations ending on or after the day, a
+    * descending cumulative sum), `n_events`, and `survival` = Π(1 − d/n) as
+    * a log10-space decimal cumulative sum of 12-dp factors with an
+    * absorbing-zero flag (a day where every at-risk user converts sends S
+    * to exactly 0, not to a -inf log). With `greenwood` the frame also
+    * carries `gs`, the 12-dp decimal cumulative sum of d/(n(n−d)), and the
+    * `dead` flag. The windows run over the per-day rollup only. */
+  private def kaplanMeier(obs: DataFrame, keys: Seq[String],
+                          greenwood: Boolean = false): DataFrame = {
+    val k = keys.map(col)
+    val conv = obs.filter(col("event") === 1)
+      .groupBy(k :+ col("days").as("day"): _*).agg(count(lit(1)).as("d"))
+    val ending = obs.groupBy(k :+ col("days").as("day"): _*)
+      .agg(count(lit(1)).as("cnt"))
+    val wDesc = Window.partitionBy(k: _*).orderBy(col("day").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val risk = ending.withColumn("n_risk", sum(col("cnt")).over(wDesc))
+      .select(k ++ Seq(col("day"), col("n_risk")): _*)
+    val wAsc = Window.partitionBy(k: _*).orderBy(col("day"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val factors = conv.join(risk, keys :+ "day")
+      .withColumn("lf",
+        when(col("d") >= col("n_risk"), lit(null).cast("double"))
+          .otherwise(round(log10(lit(1.0) - col("d").cast("double") / col("n_risk")), 12)))
+    val withGt = if (!greenwood) factors else factors.withColumn("gt",
+      when(col("d") >= col("n_risk"), lit(null).cast("double"))
+        .otherwise(round(col("d").cast("double")
+          / (col("n_risk") * (col("n_risk") - col("d"))), 12)))
+    val cum = withGt
+      .withColumn("dead", max(when(col("lf").isNull, 1L).otherwise(0L)).over(wAsc))
+      .withColumn("ls", sum(col("lf").cast(DecimalType(38, 12))).over(wAsc))
+    val withGs = if (!greenwood) cum
+      else cum.withColumn("gs", sum(col("gt").cast(DecimalType(38, 12))).over(wAsc))
+    withGs.select(k ++ Seq(col("day"), col("n_risk"), col("d").as("n_events"),
+      when(col("dead") === 1, lit(0.0))
+        .otherwise(round(pow(lit(10.0), col("ls").cast("double")), 6)).as("survival")) ++
+      (if (greenwood) Seq(col("gs"), col("dead")) else Nil): _*)
+  }
 
   /** Hourly volume-anomaly buckets from a `(ts, event_type, …)` events
     * frame: per event type, the hourly buckets whose event count deviates
@@ -140,8 +209,6 @@ object EventAnalytics extends QueryModule {
     // its assignment hash, and the spec gates it. Two grouped passes over
     // (user, arm) rows; output is one row per arm plus pooled stats.
     "q224_ab_readout" -> ((s, dir) => {
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
       // conversion = "made a HIGH-VALUE purchase" (value >= 150): on this
       // fixture every user purchases SOMETHING, and a saturated metric
       // (p = 1) has zero variance — no experiment can read it
@@ -149,7 +216,7 @@ object EventAnalytics extends QueryModule {
         .groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase" && col("value") >= 150, 1L)
           .otherwise(0L)).as("converted"))
-        .select(col("user_id"), arm.as("arm"), col("converted"))
+        .select(col("user_id"), abArm.as("arm"), col("converted"))
       val arms = users.groupBy(col("arm"))
         .agg(count(lit(1)).as("n_users"), sum(col("converted")).as("n_converted"))
         .withColumn("conv_rate",
@@ -184,10 +251,8 @@ object EventAnalytics extends QueryModule {
     // flagged at the df=1 95% critical value (3.841). One grouped count
     // over users; the statistic is closed-form from two scalars.
     "q256_srm_audit" -> ((s, dir) => {
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
       val users = ev(s, dir).select(col("user_id")).distinct()
-        .select(arm.as("arm"))
+        .select(abArm.as("arm"))
       val counts = users.groupBy(col("arm")).agg(count(lit(1)).as("n_users"))
       val a = counts.filter(col("arm") === 0).select(col("n_users").as("na"))
       val b = counts.filter(col("arm") === 1).select(col("n_users").as("nb"))
@@ -216,8 +281,6 @@ object EventAnalytics extends QueryModule {
     // wide ops are two user-keyed grouped sums and |arms|-row rollups.
     "q257_cuped_uplift" -> ((s, dir) => {
       val dec = DecimalType(38, 12)
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
       val e0 = ev(s, dir)
       val mid = e0.agg(((min(col("ts").cast("long")) + max(col("ts").cast("long")))
         / lit(2L)).as("mid"))
@@ -230,7 +293,7 @@ object EventAnalytics extends QueryModule {
           round(sum(when(col("ts").cast("long") >= col("mid"),
             round(col("value"), 6)).otherwise(lit(0.0)).cast(dec)).cast("double"), 6)
             .as("post"))
-        .select(col("user_id"), arm.as("arm"), col("pre"), col("post"))
+        .select(col("user_id"), abArm.as("arm"), col("pre"), col("post"))
       // pre/post are 6-dp exact: second moments multiply IN decimal space —
       // rounding their ~1e8-magnitude products in double is the
       // cross-engine half-way class that struck q293
@@ -293,40 +356,9 @@ object EventAnalytics extends QueryModule {
     // (epoch-second div 86400). The only windows run over the per-day
     // rollup (≤ horizon-days rows — bounded, AuditSpec-classified), never
     // the event log; everything user-level is grouped map-side.
-    "q225_km_survival" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val fv = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts").cast(LongType)).as("fv"))
-      val fp = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").cast(LongType).as("pt"))
-        .join(fv, Seq("user_id")).filter(col("pt") >= col("fv"))
-        .groupBy(col("user_id")).agg(min(col("pt")).as("fp"))
-      val mx = e.agg(max(col("ts").cast(LongType)).as("mx"))
-      val obs = fv.join(fp, Seq("user_id"), "left").crossJoin(broadcast(mx))
-        .select(
-          when(col("fp").isNotNull, expr("(fp - fv) div 86400"))
-            .otherwise(expr("(mx - fv) div 86400")).as("days"),
-          when(col("fp").isNotNull, 1L).otherwise(0L).as("event"))
-      val conv = obs.filter(col("event") === 1)
-        .groupBy(col("days").as("day")).agg(count(lit(1)).as("d"))
-      val ending = obs.groupBy(col("days").as("day")).agg(count(lit(1)).as("cnt"))
-      val wDesc = Window.orderBy(col("day").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val risk = ending.withColumn("n_risk", sum(col("cnt")).over(wDesc))
-        .select(col("day"), col("n_risk"))
-      val wAsc = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      conv.join(risk, Seq("day"))
-        .withColumn("lf",
-          when(col("d") >= col("n_risk"), lit(null).cast("double"))
-            .otherwise(round(log10(lit(1.0) - col("d").cast("double") / col("n_risk")), 12)))
-        .withColumn("dead", max(when(col("lf").isNull, 1L).otherwise(0L)).over(wAsc))
-        .withColumn("ls", sum(col("lf").cast(DecimalType(38, 12))).over(wAsc))
-        .select(col("day"), col("n_risk"), col("d").as("n_events"),
-          when(col("dead") === 1, lit(0.0))
-            .otherwise(round(pow(lit(10.0), col("ls").cast("double")), 6)).as("survival"))
-        .orderBy(col("day"))
-    }),
+    "q225_km_survival" -> ((s, dir) =>
+      kaplanMeier(timeToConversion(ev(s, dir), byArm = false), Nil)
+        .orderBy(col("day"))),
 
     // Restricted mean survival time (q325): the area under q225's KM curve
     // up to the observation horizon — "average conversion-free days per
@@ -338,38 +370,8 @@ object EventAnalytics extends QueryModule {
     // over the per-day KM rollup (q225-class, audit-classified); the event
     // log passes the same two grouped scans as q225.
     "q325_rmst" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val fv = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts").cast(LongType)).as("fv"))
-      val fp = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").cast(LongType).as("pt"))
-        .join(fv, Seq("user_id")).filter(col("pt") >= col("fv"))
-        .groupBy(col("user_id")).agg(min(col("pt")).as("fp"))
-      val mx = e.agg(max(col("ts").cast(LongType)).as("mx"))
-      val obs = fv.join(fp, Seq("user_id"), "left").crossJoin(broadcast(mx))
-        .select(
-          when(col("fp").isNotNull, expr("(fp - fv) div 86400"))
-            .otherwise(expr("(mx - fv) div 86400")).as("days"),
-          when(col("fp").isNotNull, 1L).otherwise(0L).as("event"))
-        .localCheckpoint()
-      val conv = obs.filter(col("event") === 1)
-        .groupBy(col("days").as("day")).agg(count(lit(1)).as("d"))
-      val ending = obs.groupBy(col("days").as("day")).agg(count(lit(1)).as("cnt"))
-      val wDesc = Window.orderBy(col("day").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val risk = ending.withColumn("n_risk", sum(col("cnt")).over(wDesc))
-        .select(col("day"), col("n_risk"))
-      val wAsc = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val km = conv.join(risk, Seq("day"))
-        .withColumn("lf",
-          when(col("d") >= col("n_risk"), lit(null).cast("double"))
-            .otherwise(round(log10(lit(1.0) - col("d").cast("double") / col("n_risk")), 12)))
-        .withColumn("dead", max(when(col("lf").isNull, 1L).otherwise(0L)).over(wAsc))
-        .withColumn("ls", sum(col("lf").cast(DecimalType(38, 12))).over(wAsc))
-        .select(col("day"),
-          when(col("dead") === 1, lit(0.0))
-            .otherwise(round(pow(lit(10.0), col("ls").cast("double")), 6)).as("surv"))
+      val obs = timeToConversion(ev(s, dir), byArm = false).localCheckpoint()
+      val km = kaplanMeier(obs, Nil).select(col("day"), col("survival").as("surv"))
       val tau = obs.agg(max(col("days")).as("tau"))
       val wLead = Window.orderBy(col("day"))
       val areas = km.crossJoin(broadcast(tau))
@@ -392,44 +394,8 @@ object EventAnalytics extends QueryModule {
     // variance accumulator is a 12-dp-rounded decimal cumsum over the same
     // bounded per-day rollup windows as q225 (audit-classified); bands
     // clamp to [0,1].
-    "q345_km_greenwood" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val fv = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts").cast(LongType)).as("fv"))
-      val fp = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").cast(LongType).as("pt"))
-        .join(fv, Seq("user_id")).filter(col("pt") >= col("fv"))
-        .groupBy(col("user_id")).agg(min(col("pt")).as("fp"))
-      val mx = e.agg(max(col("ts").cast(LongType)).as("mx"))
-      val obs = fv.join(fp, Seq("user_id"), "left").crossJoin(broadcast(mx))
-        .select(
-          when(col("fp").isNotNull, expr("(fp - fv) div 86400"))
-            .otherwise(expr("(mx - fv) div 86400")).as("days"),
-          when(col("fp").isNotNull, 1L).otherwise(0L).as("event"))
-      val conv = obs.filter(col("event") === 1)
-        .groupBy(col("days").as("day")).agg(count(lit(1)).as("d"))
-      val ending = obs.groupBy(col("days").as("day")).agg(count(lit(1)).as("cnt"))
-      val wDesc = Window.orderBy(col("day").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val risk = ending.withColumn("n_risk", sum(col("cnt")).over(wDesc))
-        .select(col("day"), col("n_risk"))
-      val wAsc = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      conv.join(risk, Seq("day"))
-        .withColumn("lf",
-          when(col("d") >= col("n_risk"), lit(null).cast("double"))
-            .otherwise(round(log10(lit(1.0) - col("d").cast("double") / col("n_risk")), 12)))
-        .withColumn("gt",
-          when(col("d") >= col("n_risk"), lit(null).cast("double"))
-            .otherwise(round(col("d").cast("double")
-              / (col("n_risk") * (col("n_risk") - col("d"))), 12)))
-        .withColumn("dead", max(when(col("lf").isNull, 1L).otherwise(0L)).over(wAsc))
-        .withColumn("ls", sum(col("lf").cast(DecimalType(38, 12))).over(wAsc))
-        .withColumn("gs", sum(col("gt").cast(DecimalType(38, 12))).over(wAsc))
-        .select(col("day"), col("n_risk"), col("d").as("n_events"),
-          when(col("dead") === 1, lit(0.0))
-            .otherwise(round(pow(lit(10.0), col("ls").cast("double")), 6)).as("survival"),
-          col("gs"), col("dead"))
+    "q345_km_greenwood" -> ((s, dir) =>
+      kaplanMeier(timeToConversion(ev(s, dir), byArm = false), Nil, greenwood = true)
         .select(col("day"), col("n_risk"), col("n_events"), col("survival"),
           when(col("dead") === 1, lit(0.0))
             .otherwise(round(col("survival")
@@ -440,8 +406,7 @@ object EventAnalytics extends QueryModule {
             - lit(1.96) * col("se_greenwood"), 6)).as("ci_lo"),
           least(lit(1.0), round(col("survival")
             + lit(1.96) * col("se_greenwood"), 6)).as("ci_hi"))
-        .orderBy(col("day"))
-    }),
+        .orderBy(col("day"))),
 
     // Per-arm Kaplan–Meier (q233): q225's censored time-to-conversion
     // estimator split by q224's hash-assigned arms — the readout an
@@ -451,45 +416,9 @@ object EventAnalytics extends QueryModule {
     // on this A/A null the curves should track each other (spec-gated
     // loosely). All windows partition on arm — partition-parallel; the
     // per-(arm, day) rollup stays bounded by 2 × horizon days.
-    "q233_km_by_arm" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
-      val fv = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts").cast(LongType)).as("fv"))
-        .select(col("user_id"), arm.as("arm"), col("fv"))
-      val fp = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").cast(LongType).as("pt"))
-        .join(fv.select(col("user_id"), col("fv")), Seq("user_id"))
-        .filter(col("pt") >= col("fv"))
-        .groupBy(col("user_id")).agg(min(col("pt")).as("fp"))
-      val mx = e.agg(max(col("ts").cast(LongType)).as("mx"))
-      val obs = fv.join(fp, Seq("user_id"), "left").crossJoin(broadcast(mx))
-        .select(col("arm"),
-          when(col("fp").isNotNull, expr("(fp - fv) div 86400"))
-            .otherwise(expr("(mx - fv) div 86400")).as("days"),
-          when(col("fp").isNotNull, 1L).otherwise(0L).as("event"))
-      val conv = obs.filter(col("event") === 1)
-        .groupBy(col("arm"), col("days").as("day")).agg(count(lit(1)).as("d"))
-      val ending = obs.groupBy(col("arm"), col("days").as("day"))
-        .agg(count(lit(1)).as("cnt"))
-      val wDesc = Window.partitionBy(col("arm")).orderBy(col("day").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val risk = ending.withColumn("n_risk", sum(col("cnt")).over(wDesc))
-        .select(col("arm"), col("day"), col("n_risk"))
-      val wAsc = Window.partitionBy(col("arm")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      conv.join(risk, Seq("arm", "day"))
-        .withColumn("lf",
-          when(col("d") >= col("n_risk"), lit(null).cast("double"))
-            .otherwise(round(log10(lit(1.0) - col("d").cast("double") / col("n_risk")), 12)))
-        .withColumn("dead", max(when(col("lf").isNull, 1L).otherwise(0L)).over(wAsc))
-        .withColumn("ls", sum(col("lf").cast(DecimalType(38, 12))).over(wAsc))
-        .select(col("arm"), col("day"), col("n_risk"), col("d").as("n_events"),
-          when(col("dead") === 1, lit(0.0))
-            .otherwise(round(pow(lit(10.0), col("ls").cast("double")), 6)).as("survival"))
-        .orderBy(col("arm"), col("day"))
-    }),
+    "q233_km_by_arm" -> ((s, dir) =>
+      kaplanMeier(timeToConversion(ev(s, dir), byArm = true), Seq("arm"))
+        .orderBy(col("arm"), col("day"))),
 
     // Log-rank test between the A/B arms' conversion processes (q302):
     // q233 draws the two Kaplan–Meier curves; this is the hypothesis test
@@ -504,23 +433,7 @@ object EventAnalytics extends QueryModule {
     // are 9-dp pre-rounded and decimal-summed (order-independent).
     "q302_logrank" -> ((s, dir) => {
       val dec9 = DecimalType(38, 9)
-      val e = ev(s, dir)
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
-      val fv = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts").cast(LongType)).as("fv"))
-        .select(col("user_id"), arm.as("arm"), col("fv"))
-      val fp = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").cast(LongType).as("pt"))
-        .join(fv.select(col("user_id"), col("fv")), Seq("user_id"))
-        .filter(col("pt") >= col("fv"))
-        .groupBy(col("user_id")).agg(min(col("pt")).as("fp"))
-      val mx = e.agg(max(col("ts").cast(LongType)).as("mx"))
-      val obs = fv.join(fp, Seq("user_id"), "left").crossJoin(broadcast(mx))
-        .select(col("arm"),
-          when(col("fp").isNotNull, expr("(fp - fv) div 86400"))
-            .otherwise(expr("(mx - fv) div 86400")).as("days"),
-          when(col("fp").isNotNull, 1L).otherwise(0L).as("event"))
+      val obs = timeToConversion(ev(s, dir), byArm = true)
       val ending = obs.groupBy(col("arm"), col("days"))
         .agg(count(lit(1)).as("cnt"), sum(col("event")).as("d"))
         .localCheckpoint()
@@ -739,10 +652,8 @@ object EventAnalytics extends QueryModule {
     // means and the contrast run on a calendar-bounded frame in exact
     // decimal space.
     "q313_diff_in_diff" -> ((s, dir) => {
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
       val daily = ev(s, dir)
-        .select(arm.as("arm"),
+        .select(abArm.as("arm"),
           floor(col("ts").cast(LongType) / 86400L).cast(LongType).as("day"),
           col("value"))
         .groupBy(col("arm"), col("day")).agg(exactSum(col("value"), 2).as("rev"))
@@ -2096,14 +2007,12 @@ object EventAnalytics extends QueryModule {
     // #days rows — never the event log, which passes two grouped
     // aggregations only).
     "q281_sprt_monitor" -> ((s, dir) => {
-      val arm = expr(
-        "cast(conv(substring(md5(concat(cast(user_id as string), ':ab')), 1, 4), 16, 10) as bigint) % 2")
       val u = ev(s, dir)
         .groupBy(col("user_id"))
         .agg(min(floor(col("ts").cast(LongType) / 86400L)).cast(LongType).as("day_in"),
           min(when(col("event_type") === "purchase" && col("value") >= 150,
             floor(col("ts").cast(LongType) / 86400L))).cast(LongType).as("day_conv"))
-        .select(col("user_id"), arm.as("arm"), col("day_in"), col("day_conv"))
+        .select(col("user_id"), abArm.as("arm"), col("day_in"), col("day_conv"))
         .localCheckpoint()
       val days = u.select(col("day_in").as("day")).distinct()
       val grid = days.crossJoin(broadcast(

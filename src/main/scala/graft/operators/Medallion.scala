@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryModule
-import graft.sources.Tables
+import graft.sources.{Tables, TempRoots}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -299,25 +299,21 @@ object Medallion extends QueryModule {
     // and the staged root deleted before returning, so repeated bench/verify
     // invocations leave no /tmp residue and the registered query stays
     // side-effect-free from the caller's point of view.
-    "q377_layer_cdc" -> ((s, dir) => {
+    "q377_layer_cdc" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q377_layer")
-      val root = rootPath.toString
-      try {
-        val cols = Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-        val orders = Tables.read(s, dir, "orders").select(cols.map(col): _*)
-        val base = orders.filter(col("o_orderkey") % 10 < 5)
-        val v1 = VersionedLayer.write(base, root)
-        val delta = base.filter(col("o_orderkey") % 10 < 2)
-          .withColumn("o_totalprice", col("o_totalprice") + 1)
-          .unionByName(orders.filter((col("o_orderkey") % 10).isin(5, 6)))
-        VersionedLayer.merge(delta, root, Seq("o_orderkey"))
-        val v3 = VersionedLayer.write(
-          VersionedLayer.read(s, root).filter(col("o_orderkey") % 10 =!= 4), root)
-        VersionedLayer.diff(s, root, v1, v3, Seq("o_orderkey"))
-          .orderBy(col("o_orderkey"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q377_layer").toString
+      val cols = Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
+      val orders = Tables.read(s, dir, "orders").select(cols.map(col): _*)
+      val base = orders.filter(col("o_orderkey") % 10 < 5)
+      val v1 = VersionedLayer.write(base, root)
+      val delta = base.filter(col("o_orderkey") % 10 < 2)
+        .withColumn("o_totalprice", col("o_totalprice") + 1)
+        .unionByName(orders.filter((col("o_orderkey") % 10).isin(5, 6)))
+      VersionedLayer.merge(delta, root, Seq("o_orderkey"))
+      val v3 = VersionedLayer.write(
+        VersionedLayer.read(s, root).filter(col("o_orderkey") % 10 =!= 4), root)
+      VersionedLayer.diff(s, root, v1, v3, Seq("o_orderkey"))
+        .orderBy(col("o_orderkey"))
     }),
 
     "q08_group_count" -> ((s, dir) =>
@@ -348,49 +344,46 @@ object Medallion extends QueryModule {
     // 100 GB delta writes ~100 GB, not the 10 TB standing table";
     // everything driver-side is a bounded scalar fetch (max key, six
     // 3-column aggregate rows, manifest entry lists).
-    "q393_pruned_merge_audit" -> ((s, dir) => {
+    "q393_pruned_merge_audit" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q393_pruned")
-      val root = rootPath.toString
-      try {
-        val orders = Tables.read(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_totalprice"))
-        val m = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        // span > m/4, so keys [0..m] land in exactly buckets 0..3 with no
-        // negative-division edge (fixture orderkeys are 0-based)
-        val span = m / 4 + 1
-        def quartile(b: Long) =
-          orders.filter(expr(s"o_orderkey div $span") === b)
-        VersionedLayer.write(quartile(0).coalesce(1), root)
-        for (b <- 1L to 3L)
-          VersionedLayer.merge(quartile(b).coalesce(1), root, Seq("o_orderkey"))
-        // key-local update: prunable to quartile 1's single file
-        VersionedLayer.merge(
-          quartile(1).filter(col("o_orderkey") % 5 === 2)
-            .withColumn("o_totalprice", col("o_totalprice") + 1000)
-            .coalesce(1),
-          root, Seq("o_orderkey"))
-        // pure append: keys beyond every file's max — zero files rewritten
-        VersionedLayer.merge(
-          quartile(0).select((col("o_orderkey") + (m + 1)).as("o_orderkey"),
-            col("o_totalprice")).coalesce(1),
-          root, Seq("o_orderkey"))
-        val audit = (1L to 6L).map { v =>
-          val entries = VersionedLayer.fileEntries(s, root, v)
-          val prev = if (v == 1) Set.empty[String]
-          else VersionedLayer.fileEntries(s, root, v - 1).map(_.path).toSet
-          val carried = entries.filter(e => prev(e.path)).map(_.rows).sum
-          val rewritten = entries.filterNot(e => prev(e.path)).map(_.rows).sum
-          val snap = VersionedLayer.read(s, root, Some(v))
-            .agg(count(lit(1)), sum(col("o_orderkey")),
-              graft.functions.ExactAgg.exactSum(col("o_totalprice"), 2)).head()
-          (v, carried, rewritten, snap.getLong(0), snap.getLong(1), snap.getDouble(2))
-        }
-        import s.implicits._
-        audit.toDF("step", "carried_rows", "rewritten_rows",
-          "snap_rows", "snap_key_sum", "snap_price_sum")
-          .orderBy(col("step"))
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q393_pruned").toString
+      val orders = Tables.read(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_totalprice"))
+      val m = orders.agg(max(col("o_orderkey"))).head().getLong(0)
+      // span > m/4, so keys [0..m] land in exactly buckets 0..3 with no
+      // negative-division edge (fixture orderkeys are 0-based)
+      val span = m / 4 + 1
+      def quartile(b: Long) =
+        orders.filter(expr(s"o_orderkey div $span") === b)
+      VersionedLayer.write(quartile(0).coalesce(1), root)
+      for (b <- 1L to 3L)
+        VersionedLayer.merge(quartile(b).coalesce(1), root, Seq("o_orderkey"))
+      // key-local update: prunable to quartile 1's single file
+      VersionedLayer.merge(
+        quartile(1).filter(col("o_orderkey") % 5 === 2)
+          .withColumn("o_totalprice", col("o_totalprice") + 1000)
+          .coalesce(1),
+        root, Seq("o_orderkey"))
+      // pure append: keys beyond every file's max — zero files rewritten
+      VersionedLayer.merge(
+        quartile(0).select((col("o_orderkey") + (m + 1)).as("o_orderkey"),
+          col("o_totalprice")).coalesce(1),
+        root, Seq("o_orderkey"))
+      val audit = (1L to 6L).map { v =>
+        val entries = VersionedLayer.fileEntries(s, root, v)
+        val prev = if (v == 1) Set.empty[String]
+        else VersionedLayer.fileEntries(s, root, v - 1).map(_.path).toSet
+        val carried = entries.filter(e => prev(e.path)).map(_.rows).sum
+        val rewritten = entries.filterNot(e => prev(e.path)).map(_.rows).sum
+        val snap = VersionedLayer.read(s, root, Some(v))
+          .agg(count(lit(1)), sum(col("o_orderkey")),
+            graft.functions.ExactAgg.exactSum(col("o_totalprice"), 2)).head()
+        (v, carried, rewritten, snap.getLong(0), snap.getLong(1), snap.getDouble(2))
+      }
+      import s.implicits._
+      audit.toDF("step", "carried_rows", "rewritten_rows",
+        "snap_rows", "snap_key_sum", "snap_price_sum")
+        .orderBy(col("step"))
     })
   )
 

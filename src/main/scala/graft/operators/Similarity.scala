@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.{QueryModule, SessionLayers}
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
+import graft.sources.{Tables, TempRoots}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1138,28 +1138,24 @@ object Similarity extends QueryModule {
     // runs nightly: nothing ever re-encodes the standing corpus — the merge
     // anti-join over narrow (vec_id, b) keys is the only pass over the big
     // index, and the batch side broadcasts (AQE decides). Lifecycle is
-    // q377/q383's staged-temp-root discipline: localCheckpoint the result,
-    // delete the root — no side effects escape the query function.
-    "q386_ann_index_cdc" -> ((s, dir) => {
+    // TempRoots.scoped: localCheckpoint the result, delete the root — no
+    // side effects escape the query function.
+    "q386_ann_index_cdc" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q386_ann_idx")
-      val root = rootPath.toString
-      try {
-        // One encode pass serves both the initial standing-index build and
-        // the batch delta (assignments are per-vector, so the split-after-
-        // encode frame is row-identical to encoding each slice separately —
-        // a production nightly run encodes ONLY the arriving batch and
-        // never touches the standing rows; here the standing build is part
-        // of the measured run anyway, so sharing the pass just avoids a
-        // second corpus scan).
-        val idx = annIndexRows(s, dir, lit(true)).localCheckpoint()
-        VersionedLayer.write(idx.filter(col("vec_id") % 10 =!= 0), root)
-        VersionedLayer.merge(idx.filter(col("vec_id") % 10 === 0),
-          root, Seq("vec_id", "b"))
-        VersionedLayer.read(s, root)
-          .orderBy(col("vec_id"), col("b"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q386_ann_idx").toString
+      // One encode pass serves both the initial standing-index build and
+      // the batch delta (assignments are per-vector, so the split-after-
+      // encode frame is row-identical to encoding each slice separately —
+      // a production nightly run encodes ONLY the arriving batch and
+      // never touches the standing rows; here the standing build is part
+      // of the measured run anyway, so sharing the pass just avoids a
+      // second corpus scan).
+      val idx = annIndexRows(s, dir, lit(true)).localCheckpoint()
+      VersionedLayer.write(idx.filter(col("vec_id") % 10 =!= 0), root)
+      VersionedLayer.merge(idx.filter(col("vec_id") % 10 === 0),
+        root, Seq("vec_id", "b"))
+      VersionedLayer.read(s, root)
+        .orderBy(col("vec_id"), col("b"))
     }),
 
     // ANN-index takedown (q395) — q394's compliance leg on the DENSE side,
@@ -1177,21 +1173,17 @@ object Similarity extends QueryModule {
     // oracle rebuilds the full index from scratch (the shared ivfPqIndexSql
     // text) and filters the takedown ids: hash equality proves the delete
     // removed exactly the requested vectors' rows and nothing else.
-    "q395_ann_index_takedown" -> ((s, dir) => {
+    "q395_ann_index_takedown" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.sources.VersionedLayer
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q395_ann_takedown")
-      val root = rootPath.toString
-      try {
-        val idx = annIndexRows(s, dir, lit(true)).localCheckpoint()
-        VersionedLayer.write(idx, root)
-        VersionedLayer.compact(s, root, targetFiles = 4, sortBy = Seq("vec_id"))
-        VersionedLayer.deleteKeys(
-          emb(s, dir).filter(col("vec_id") % 13 === 5).select(col("vec_id")),
-          root, Seq("vec_id"))
-        VersionedLayer.read(s, root)
-          .orderBy(col("vec_id"), col("b"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally graft.sources.TempRoots.deleteRecursively(rootPath)
+      val root = sc.dir("graft_q395_ann_takedown").toString
+      val idx = annIndexRows(s, dir, lit(true)).localCheckpoint()
+      VersionedLayer.write(idx, root)
+      VersionedLayer.compact(s, root, targetFiles = 4, sortBy = Seq("vec_id"))
+      VersionedLayer.deleteKeys(
+        emb(s, dir).filter(col("vec_id") % 13 === 5).select(col("vec_id")),
+        root, Seq("vec_id"))
+      VersionedLayer.read(s, root)
+        .orderBy(col("vec_id"), col("b"))
     }),
 
     // kNN label transfer through the seeded IVF index (see

@@ -200,10 +200,6 @@ object EventStream {
   private def transientCheckpointDir(): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft_ckpt_")
 
-  // cleanup is best-effort (swallow = true)
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    graft.sources.TempRoots.deleteRecursively(root, swallow = true)
-
   /** Guard for the session-wide `resetTerminated()` calls below: this
     * engine's documented invariant is one stream at a time (Verify, Bench
     * and the specs all drive streams sequentially), and clearing the
@@ -267,7 +263,7 @@ object EventStream {
       spark.streams.resetTerminated()
     } finally {
       if (statePartitions > 0) spark.conf.set(key, prev)
-      deleteRecursively(ckpt)
+      graft.sources.TempRoots.deleteRecursively(ckpt, swallow = true) // best-effort
     }
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.QueryModule
 import graft.functions.ExactAgg.exactSum
-import graft.sources.Tables
+import graft.sources.{Tables, TempRoots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -25,6 +25,13 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * holds the final (hour × type) grid on the driver — bounded (~hours ×
   * |types| rows, a few thousand at any SF), and a real deployment swaps it
   * for a parquet/Kafka sink without touching the plan.
+  *
+  * Lifecycle: every query here runs its body inside [[TempRoots.scoped]].
+  * Sink names come from `scope.sink` and staged drop folders from
+  * `scope.dir`; the scope checkpoints the result, then drops the sink's
+  * temp view and deletes the folders, also when the stream fails. A memory
+  * sink left registered lives for the whole session and taxes every later
+  * query's GC (the round-17 finding: q10 went from 0.38 s to 2.19 s).
   */
 object StreamParity extends QueryModule {
 
@@ -32,22 +39,21 @@ object StreamParity extends QueryModule {
     * [[Tables.read]]: same footer probe (ns-vs-µs physical drift, the
     * round-11 incident class), same declared schema (a stream can never
     * infer), same µs conversion on the legacy branch. */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
+  def readEventsStream(spark: SparkSession, dir: String,
+                       scope: TempRoots.Scope): DataFrame = {
     val path = s"$dir/events.parquet"
     // batch footer probe (cheap — no data pages); the stream itself then
     // reads with the branch's declared schema
     Tables.read(spark, dir, "events") // runs probe + sanity check once
     // The file-stream source monitors a DIRECTORY (its production contract:
     // files land in a drop folder); fixtures ship events.parquet as a single
-    // file, so stage it into a per-(dir) temp directory via symlink — zero
-    // copy, and the stream sees the standard files-in-a-directory layout.
-    val stage = stageDirs.computeIfAbsent(path, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_q197_events")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("events.parquet"), java.nio.file.Paths.get(path))
-      d.toString
-    })
-    streamFromStage(spark, stage, legacyNsTs(spark, path))
+    // file, so stage it into a temp directory of the caller's scope via
+    // symlink — zero copy, and the stream sees the standard
+    // files-in-a-directory layout.
+    val stage = scope.dir("graft_q197_events")
+    java.nio.file.Files.createSymbolicLink(
+      stage.resolve("events.parquet"), java.nio.file.Paths.get(path))
+    streamFromStage(spark, stage.toString, legacyNsTs(spark, path))
   }
 
   /** Whether the fixture file carries the legacy raw-INT64 TIMESTAMP(NANOS)
@@ -66,10 +72,6 @@ object StreamParity extends QueryModule {
     else
       spark.readStream.schema(Tables.events).parquet(stage)
 
-  /** One staging directory per fixture file per JVM (bench reps reuse it). */
-  private val stageDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Tumbling 1-hour counts + DECIMAL-space sums per event type — the
     * [[EventStream.hourlyByType]] pipeline with the engine's exact-sum
     * discipline so the streaming result is order-independent and
@@ -84,17 +86,14 @@ object StreamParity extends QueryModule {
         col("window.start").cast(LongType).as("unix_hour"),
         col("n_events"), col("sum_value"))
 
-  /** Memory-sink names must be unique per invocation (bench reps re-run the
-    * query in one session; a reused name would collide). */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The q379 streaming aggregation (per-hour HLL registers). */
-  private def hllHourlyRegisters(s: SparkSession, dir: String): DataFrame = {
+  private def hllHourlyRegisters(s: SparkSession, dir: String,
+                                 scope: TempRoots.Scope): DataFrame = {
     // (Measured, not assumed: the single-file source scans as ONE partition,
     // but fanning it out with a pre-hash repartition(32) made BOTH queries
     // SLOWER — the extra exchange costs more than the single-core hash pass
     // at this row count. Leave the source partitioning alone.)
-    val ev = readEventsStream(s, dir)
+    val ev = readEventsStream(s, dir, scope)
       .select(col("ts"),
         expr("cast(conv(substring(md5(concat('shll:', cast(user_id as string))), 1, 8), 16, 10) as bigint)").as("h"))
       .select(col("ts"), (col("h") % 64).as("bucket"), expr("h div 64").as("w"))
@@ -108,10 +107,11 @@ object StreamParity extends QueryModule {
   }
 
   /** The q384 streaming aggregation (per-hour 4×256 CMS cells). */
-  private def cmsHourlyCells(s: SparkSession, dir: String): DataFrame = {
+  private def cmsHourlyCells(s: SparkSession, dir: String,
+                             scope: TempRoots.Scope): DataFrame = {
     def h(i: Int) =
       s"cast(conv(substring(md5(concat('scms$i:', cast(user_id as string))), 1, 8), 16, 10) as bigint) % 256"
-    val ev = readEventsStream(s, dir)
+    val ev = readEventsStream(s, dir, scope)
       .select(col("ts"), posexplode(array((0 until 4).map(i => expr(h(i))): _*)))
     ev.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("pos"), col("col"))
@@ -131,9 +131,9 @@ object StreamParity extends QueryModule {
     * files to appear atomically), and its mod-time is pinned `seq` minutes
     * after the fixture's so the file-stream's mod-time ordering processes
     * fixture first, sentinels in sequence. */
-  private def writeSentinel(spark: SparkSession, stage: java.nio.file.Path,
-                            name: String, tsSec: Long, legacyNs: Boolean,
-                            baseModTimeMs: Long, seq: Int): Unit = {
+  private def writeSentinel(spark: SparkSession, scope: TempRoots.Scope,
+                            stage: java.nio.file.Path, name: String, tsSec: Long,
+                            legacyNs: Boolean, baseModTimeMs: Long, seq: Int): Unit = {
     import scala.jdk.CollectionConverters._
     val row: org.apache.spark.sql.Row =
       if (legacyNs)
@@ -142,7 +142,7 @@ object StreamParity extends QueryModule {
         org.apache.spark.sql.Row(-1L, new java.sql.Timestamp(tsSec * 1000L), -1L,
           "sentinel", 0.0, "{}")
     val schema = if (legacyNs) Tables.eventsOnDisk else Tables.events
-    val side = java.nio.file.Files.createTempDirectory("graft_sentinel")
+    val side = scope.dir("graft_sentinel")
     spark.createDataFrame(Seq(row).asJava, schema)
       .coalesce(1).write.mode("overwrite").parquet(side.resolve("w").toString)
     val listing = java.nio.file.Files.list(side.resolve("w"))
@@ -160,9 +160,9 @@ object StreamParity extends QueryModule {
     // Streaming batch-equivalence (q197): see the module scaladoc. The
     // oracle is the plain batch SQL — a green hash row IS the proof that
     // the streaming path computes the batch answer.
-    "q197_stream_batch_equiv" -> ((s, dir) => {
-      val agg = hourlyByTypeExact(readEventsStream(s, dir))
-      val sink = s"q197_sink_${sinkSeq.incrementAndGet()}"
+    "q197_stream_batch_equiv" -> ((s, dir) => TempRoots.scoped(s) { sc =>
+      val agg = hourlyByTypeExact(readEventsStream(s, dir, sc))
+      val sink = sc.sink("q197")
       EventStream.runOnceToMemory(agg, sink)
       s.table(sink).orderBy(col("event_type"), col("unix_hour"))
     }),
@@ -182,11 +182,11 @@ object StreamParity extends QueryModule {
     // run forever; the memory sink holds one row per distinct event
     // (harness-shaped; a deployment sinks to parquet/Kafka without touching
     // the plan).
-    "q198_stream_dedup_equiv" -> ((s, dir) => {
+    "q198_stream_dedup_equiv" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       val path = s"$dir/events.parquet"
       Tables.read(s, dir, "events") // footer probe + ts sanity check
       val legacy = legacyNsTs(s, path)
-      val stage = java.nio.file.Files.createTempDirectory("graft_q198_redeliver")
+      val stage = sc.dir("graft_q198_redeliver")
       java.nio.file.Files.createSymbolicLink(
         stage.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
       java.nio.file.Files.createSymbolicLink(
@@ -195,7 +195,7 @@ object StreamParity extends QueryModule {
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("event_type"), col("value"))
-      val sink = s"q198_sink_${sinkSeq.incrementAndGet()}"
+      val sink = sc.sink("q198")
       EventStream.runOnceAppendToMemory(deduped, sink, maxFilesPerTrigger = 1)
       s.table(sink)
         .groupBy(col("event_type"))
@@ -219,23 +219,23 @@ object StreamParity extends QueryModule {
     // machine computes precisely the declarative batch answer, timeouts
     // included. Per-key state is O(1) (one open session), so the pipeline
     // runs forever on an unbounded stream.
-    "q199_stream_session_equiv" -> ((s, dir) => {
+    "q199_stream_session_equiv" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import s.implicits._
       val path = s"$dir/events.parquet"
       val batchEvents = Tables.read(s, dir, "events")
       val legacy = legacyNsTs(s, path)
       val maxSec = batchEvents.agg(max(unix_timestamp(col("ts")))).head.getLong(0)
-      val stage = java.nio.file.Files.createTempDirectory("graft_q199_sessions")
+      val stage = sc.dir("graft_q199_sessions")
       val fixture = java.nio.file.Paths.get(path)
       java.nio.file.Files.createSymbolicLink(stage.resolve("events.parquet"), fixture)
       val baseMs = java.nio.file.Files.getLastModifiedTime(fixture).toMillis
-      writeSentinel(s, stage, "z1_sentinel.parquet", maxSec + 86400L, legacy, baseMs, 1)
-      writeSentinel(s, stage, "z2_sentinel.parquet", maxSec + 2 * 86400L, legacy, baseMs, 2)
+      writeSentinel(s, sc, stage, "z1_sentinel.parquet", maxSec + 86400L, legacy, baseMs, 1)
+      writeSentinel(s, sc, stage, "z2_sentinel.parquet", maxSec + 2 * 86400L, legacy, baseMs, 2)
       val events = streamFromStage(s, stage.toString, legacy)
         .select(col("user_id"), col("ts"), col("value"))
         .as[EventStream.UserEvent]
       val sessions = EventStream.sessionizeWithState(events, gapSec = 600L).toDF()
-      val sink = s"q199_sink_${sinkSeq.incrementAndGet()}"
+      val sink = sc.sink("q199")
       EventStream.runOnceAppendToMemory(sessions, sink, maxFilesPerTrigger = 1)
       s.table(sink)
         .filter(col("user_id") >= 0) // drop the sentinel user's own session
@@ -253,10 +253,10 @@ object StreamParity extends QueryModule {
     // the EXACT hamming join replayed in SQL (q58's md5-halves SimHash
     // replay) — a green hash proves the streaming probe flags precisely the
     // exact-join answer, index layout and chunk arithmetic included.
-    "q201_stream_quarantine" -> ((s, dir) => {
+    "q201_stream_quarantine" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       val d = Tables.read(s, dir, "documents")
       val isBatch = col("doc_id") % 10 === 7
-      val stage = java.nio.file.Files.createTempDirectory("graft_q201_arrivals")
+      val stage = sc.dir("graft_q201_arrivals")
       d.filter(isBatch)
         .select(col("doc_id"),
           timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"), col("text"))
@@ -264,7 +264,7 @@ object StreamParity extends QueryModule {
       val index = DocStream.referenceIndex(d.filter(!isBatch))
       val flagged = DocStream.flagNearDups(
         DocStream.readArrivals(s, stage.resolve("in").toString), index)
-      val sink = s"q201_sink_${sinkSeq.incrementAndGet()}"
+      val sink = sc.sink("q201")
       EventStream.runOnceAppendToMemory(flagged, sink)
       s.table(sink)
         .select(col("doc_id"), unix_timestamp(col("ts")).as("flag_ts"))
@@ -295,10 +295,10 @@ object StreamParity extends QueryModule {
     // calibration cadence, stream untouched). The oracle replays score, tau
     // and verdict per arrival — a green hash proves the deployed stream gate
     // admits precisely the batch-computed conformal set, threshold included.
-    "q212_stream_conformal" -> ((s, dir) => {
+    "q212_stream_conformal" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       val d = Tables.read(s, dir, "documents")
       val isArr = col("doc_id") % 10 === 7
-      val stage = java.nio.file.Files.createTempDirectory("graft_q212_arrivals")
+      val stage = sc.dir("graft_q212_arrivals")
       d.filter(isArr)
         .select(col("doc_id"),
           timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"), col("text"))
@@ -310,7 +310,7 @@ object StreamParity extends QueryModule {
         .select(col("doc_id"), col("quality"),
           when(col("quality") >= lit(tau), 1L).otherwise(0L).as("admitted"),
           lit(tau).as("tau"))
-      val sink = s"q212_sink_${sinkSeq.incrementAndGet()}"
+      val sink = sc.sink("q212")
       EventStream.runOnceAppendToMemory(scored, sink)
       s.table(sink).orderBy(col("doc_id"))
     }),
@@ -327,11 +327,11 @@ object StreamParity extends QueryModule {
     // replayable construction ([[graft.functions.HllReplay]]), so the
     // DuckDB oracle rebuilds the per-hour registers exactly and the
     // relative error is audited against the exact per-hour distinct.
-    "q379_stream_hll" -> ((s, dir) => {
+    "q379_stream_hll" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import org.apache.spark.sql.types.DecimalType
       val dec = DecimalType(38, 12)
-      val agg = hllHourlyRegisters(s, dir)
-      val sink = s"q379_sink_${sinkSeq.incrementAndGet()}"
+      val agg = hllHourlyRegisters(s, dir, sc)
+      val sink = sc.sink("q379")
       EventStream.runOnceToMemory(agg, sink, statePartitions = 32)
       val est = s.table(sink)
         .groupBy(col("unix_hour"))
@@ -350,20 +350,12 @@ object StreamParity extends QueryModule {
       // est is the ≤720-row per-hour rollup of the register sink —
       // broadcast it so the exact side's aggregation output joins in place
       // (same memory-sink-stats rationale as q384's probe join)
-      val out = exact.join(broadcast(est), "unix_hour")
+      exact.join(broadcast(est), "unix_hour")
         .select(col("unix_hour"), col("exact_users"),
           round(col("e"), 6).as("hll_est"),
           round(abs(col("e") - col("exact_users")) / col("exact_users"), 6)
             .as("rel_err"))
         .orderBy(col("unix_hour"))
-        // Materialize the 720-row rollup and release the ~46k-row register
-        // sink: memory-sink tables live for the whole session, so a
-        // min-of-5 bench otherwise pins 5 copies of the raw cell table and
-        // the GC pressure taxes every query that runs after this one (the
-        // round-17 q10 finding — 0.38 s → 2.19 s purely from session heap).
-        .localCheckpoint()
-      s.catalog.dropTempView(sink)
-      out
     }),
 
     // Streaming heavy-hitters via Count-Min registers (q384) — q379's
@@ -381,12 +373,12 @@ object StreamParity extends QueryModule {
     // ITSELF and the estimates hash-match exactly; overcount is the
     // measured collision mass (CMS never undercounts — spec-pinned).
     // All-integer output: no float hazards anywhere.
-    "q384_stream_cms_topk" -> ((s, dir) => {
+    "q384_stream_cms_topk" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import org.apache.spark.sql.expressions.Window
       def h(i: Int) =
         s"cast(conv(substring(md5(concat('scms$i:', cast(user_id as string))), 1, 8), 16, 10) as bigint) % 256"
-      val agg = cmsHourlyCells(s, dir)
-      val sink = s"q384_sink_${sinkSeq.incrementAndGet()}"
+      val agg = cmsHourlyCells(s, dir, sc)
+      val sink = sc.sink("q384")
       EventStream.runOnceToMemory(agg, sink, statePartitions = 32)
       val cells = s.table(sink)
       val li = Tables.read(s, dir, "events")
@@ -410,19 +402,12 @@ object StreamParity extends QueryModule {
       // for a ≤3,600-row result (measured: the probe leg, not the stream,
       // was the bigger half of q384's close cost). With the broadcast the
       // cell table is scanned once in place and never shuffled.
-      val out = cells.join(broadcast(ph), Seq("unix_hour", "r", "b"))
+      cells.join(broadcast(ph), Seq("unix_hour", "r", "b"))
         .groupBy(col("unix_hour"), col("rk"), col("user_id"), col("true_count"))
         .agg(min(col("c")).as("cms_est"))
         .select(col("unix_hour"), col("rk"), col("user_id"), col("true_count"),
           col("cms_est"), (col("cms_est") - col("true_count")).as("overcount"))
         .orderBy(col("unix_hour"), col("rk"))
-        // Materialize the 3,600-row probe result and release the ~300k-row
-        // CMS cell sink (83× the result) — see q379's note: session-lived
-        // memory sinks otherwise accumulate across bench reps and tax every
-        // later query's GC.
-        .localCheckpoint()
-      s.catalog.dropTempView(sink)
-      out
     }),
 
     // Streaming embedding admission (q388) — q201's stream-static quarantine
@@ -446,7 +431,7 @@ object StreamParity extends QueryModule {
     // bucket join's shuffle narrow. JSON doubles round-trip exactly
     // (shortest-round-trip serialization), so the streamed vectors are
     // bit-identical to the oracle's recomputation.
-    "q388_stream_embedding_admission" -> ((s, dir) => {
+    "q388_stream_embedding_admission" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.operators.Similarity
       import graft.functions.VectorFunctions
       val base = Tables.read(s, dir, "embeddings")
@@ -456,9 +441,8 @@ object StreamParity extends QueryModule {
         expr("""transform(v, (x, i) ->
           | x + cast((vec_id * 31 + i * 17) % 2001 - 1000 as double) / 1000000.0)"""
           .stripMargin).as("v"))
-      val stage = java.nio.file.Files.createTempDirectory("graft_q388_arrivals")
-      val sink = s"q388_sink_${sinkSeq.incrementAndGet()}"
-      try {
+      val stage = sc.dir("graft_q388_arrivals")
+      val sink = sc.sink("q388")
       copies
         .select(col("vec_id"),
           timestamp_seconds(lit(1704067200L) + col("vec_id")).as("ts"), col("v"))
@@ -488,18 +472,9 @@ object StreamParity extends QueryModule {
         .filter(col("sim") >= 0.9)
         .dropDuplicatesWithinWatermark("vec_id", "ref_id")
       EventStream.runOnceAppendToMemory(flagged, sink)
-      // Materialize the flagged pairs — then the finally releases BOTH run
-      // artifacts even on a failed stream: the memory sink (session-lived
-      // otherwise: the round-17 q10 heap-tax class q379/q384 already cure)
-      // and the arrivals staging dir (the q391/q392 try/finally discipline).
       s.table(sink)
         .select(col("vec_id").as("arr_id"), col("ref_id"), col("sim"))
         .orderBy(col("arr_id"), col("ref_id"))
-        .localCheckpoint()
-      } finally {
-        try s.catalog.dropTempView(sink) catch { case _: Exception => () }
-        graft.sources.TempRoots.deleteRecursively(stage, swallow = true)
-      }
     }),
 
     // Streaming index maintenance (q391) — the maintainer set's STREAMING
@@ -521,45 +496,35 @@ object StreamParity extends QueryModule {
     // stream itself is STATELESS (foreachBatch append; no watermark state,
     // no sink tables) — the only growing artifact is the maintained layer,
     // whose per-batch delta is 8 narrow rows per arriving doc.
-    "q391_stream_index_maintenance" -> ((s, dir) => {
+    "q391_stream_index_maintenance" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.operators.Dedup
       import graft.sources.VersionedLayer
       val d = Tables.read(s, dir, "documents")
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q391_lsh_idx")
-      val root = rootPath.toString
-      val stage = java.nio.file.Files.createTempDirectory("graft_q391_arrivals")
-      try {
-        VersionedLayer.write(
-          Dedup.lshIndexRows(d.filter(!(col("doc_id") % 10 === 7))), root)
-        // Staging assumption (same contract as q201/q212's JSON doc
-        // streams): fixture text is valid UTF-8, which the JSON writer
-        // round-trips exactly — the streamed text is then bit-identical to
-        // what the oracle tokenizes from parquet. Malformed UTF-8 would be
-        // re-encoded with replacement chars and hash-fail THIS query while
-        // q389/q390 (direct parquet readers) pass; that asymmetry is the
-        // diagnostic signature, not a silent divergence.
-        d.filter(col("doc_id") % 10 === 7).select(col("doc_id"), col("text"))
-          .repartition(4)
-          .write.mode("overwrite").json(stage.resolve("in").toString)
-        val arrivalSchema = new org.apache.spark.sql.types.StructType()
-          .add("doc_id", LongType)
-          .add("text", org.apache.spark.sql.types.StringType)
-        val arrivals = s.readStream.schema(arrivalSchema)
-          .option("maxFilesPerTrigger", 1)
-          .json(stage.resolve("in").toString)
-        EventStream.runOnceForeachBatch(arrivals, "q391_maint",
-          (b, id) => VersionedLayer.idempotentMergeBatch(
-            root, Seq("doc_id", "band_id"), "q391")(Dedup.lshIndexRows(b), id))
-        VersionedLayer.read(s, root)
-          .orderBy(col("doc_id"), col("band_id"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally {
-        // q391's roots are per-invocation, not session-cached like
-        // stageDirs — the maintained layer must not leak between runs
-        // (the q377/q383/q386 staged-temp-root discipline)
-        graft.sources.TempRoots.deleteRecursively(rootPath, swallow = true)
-        graft.sources.TempRoots.deleteRecursively(stage, swallow = true)
-      }
+      val root = sc.dir("graft_q391_lsh_idx").toString
+      val stage = sc.dir("graft_q391_arrivals")
+      VersionedLayer.write(
+        Dedup.lshIndexRows(d.filter(!(col("doc_id") % 10 === 7))), root)
+      // Staging assumption (same contract as q201/q212's JSON doc
+      // streams): fixture text is valid UTF-8, which the JSON writer
+      // round-trips exactly — the streamed text is then bit-identical to
+      // what the oracle tokenizes from parquet. Malformed UTF-8 would be
+      // re-encoded with replacement chars and hash-fail THIS query while
+      // q389/q390 (direct parquet readers) pass; that asymmetry is the
+      // diagnostic signature, not a silent divergence.
+      d.filter(col("doc_id") % 10 === 7).select(col("doc_id"), col("text"))
+        .repartition(4)
+        .write.mode("overwrite").json(stage.resolve("in").toString)
+      val arrivalSchema = new org.apache.spark.sql.types.StructType()
+        .add("doc_id", LongType)
+        .add("text", org.apache.spark.sql.types.StringType)
+      val arrivals = s.readStream.schema(arrivalSchema)
+        .option("maxFilesPerTrigger", 1)
+        .json(stage.resolve("in").toString)
+      EventStream.runOnceForeachBatch(arrivals, "q391_maint",
+        (b, id) => VersionedLayer.idempotentMergeBatch(
+          root, Seq("doc_id", "band_id"), "q391")(Dedup.lshIndexRows(b), id))
+      VersionedLayer.read(s, root)
+        .orderBy(col("doc_id"), col("band_id"))
     }),
 
     // Streaming ANN-index maintenance (q392) — q391's exactly-once
@@ -576,38 +541,31 @@ object StreamParity extends QueryModule {
     // probe oracles all verify against ONE SQL text. Stateless stream;
     // the growing artifact is the maintained index (1 + m narrow rows per
     // arriving vector).
-    "q392_stream_ann_index_maintenance" -> ((s, dir) => {
+    "q392_stream_ann_index_maintenance" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.operators.Similarity
-      import graft.sources.{TempRoots, VersionedLayer}
+      import graft.sources.VersionedLayer
       import graft.functions.VectorFunctions
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q392_ann_idx")
-      val root = rootPath.toString
-      val stage = java.nio.file.Files.createTempDirectory("graft_q392_arrivals")
-      try {
-        VersionedLayer.write(
-          Similarity.annIndexRows(s, dir, col("vec_id") % 10 =!= 0), root)
-        Tables.read(s, dir, "embeddings")
-          .filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
-          .repartition(4)
-          .write.mode("overwrite").json(stage.resolve("in").toString)
-        val arrivalSchema = new org.apache.spark.sql.types.StructType()
-          .add("vec_id", LongType)
-          .add("v", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))
-        val arrivals = s.readStream.schema(arrivalSchema)
-          .option("maxFilesPerTrigger", 1)
-          .json(stage.resolve("in").toString)
-        EventStream.runOnceForeachBatch(arrivals, "q392_maint",
-          (b, id) => VersionedLayer.idempotentMergeBatch(
-            root, Seq("vec_id", "b"), "q392")(Similarity.annIndexRowsOf(s, dir, b), id))
-        VersionedLayer.read(s, root)
-          .orderBy(col("vec_id"), col("b"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally {
-        graft.sources.TempRoots.deleteRecursively(rootPath, swallow = true)
-        graft.sources.TempRoots.deleteRecursively(stage, swallow = true)
-      }
+      val root = sc.dir("graft_q392_ann_idx").toString
+      val stage = sc.dir("graft_q392_arrivals")
+      VersionedLayer.write(
+        Similarity.annIndexRows(s, dir, col("vec_id") % 10 =!= 0), root)
+      Tables.read(s, dir, "embeddings")
+        .filter(col("vec_id") % 10 === 0)
+        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
+        .repartition(4)
+        .write.mode("overwrite").json(stage.resolve("in").toString)
+      val arrivalSchema = new org.apache.spark.sql.types.StructType()
+        .add("vec_id", LongType)
+        .add("v", org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.DoubleType))
+      val arrivals = s.readStream.schema(arrivalSchema)
+        .option("maxFilesPerTrigger", 1)
+        .json(stage.resolve("in").toString)
+      EventStream.runOnceForeachBatch(arrivals, "q392_maint",
+        (b, id) => VersionedLayer.idempotentMergeBatch(
+          root, Seq("vec_id", "b"), "q392")(Similarity.annIndexRowsOf(s, dir, b), id))
+      VersionedLayer.read(s, root)
+        .orderBy(col("vec_id"), col("b"))
     }),
 
     // Streaming index takedown (q396) — the DELETE column of the
@@ -624,41 +582,34 @@ object StreamParity extends QueryModule {
     // the identical index — the q389/q390/q391 one-oracle contract, now on
     // the delete side. Stateless stream; the only artifact is the
     // maintained layer, shrinking by exactly the requested documents.
-    "q396_stream_index_takedown" -> ((s, dir) => {
+    "q396_stream_index_takedown" -> ((s, dir) => TempRoots.scoped(s) { sc =>
       import graft.operators.Dedup
       import graft.sources.VersionedLayer
       val d = Tables.read(s, dir, "documents")
-      val rootPath = java.nio.file.Files.createTempDirectory("graft_q396_takedown_idx")
-      val root = rootPath.toString
-      val stage = java.nio.file.Files.createTempDirectory("graft_q396_requests")
-      try {
-        VersionedLayer.write(Dedup.lshIndexRows(d), root)
-        d.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
-          .repartition(4)
-          .write.mode("overwrite").json(stage.resolve("in").toString)
-        val requestSchema = new org.apache.spark.sql.types.StructType()
-          .add("doc_id", LongType)
-        val requests = s.readStream.schema(requestSchema)
-          .option("maxFilesPerTrigger", 1)
-          .json(stage.resolve("in").toString)
-        EventStream.runOnceForeachBatch(requests, "q396_takedown",
-          (b, id) => VersionedLayer.idempotentDeleteBatch(
-            root, Seq("doc_id"), "q396")(b, id))
-        VersionedLayer.read(s, root)
-          .orderBy(col("doc_id"), col("band_id"))
-          .localCheckpoint() // detach from the staged files before deletion
-      } finally {
-        graft.sources.TempRoots.deleteRecursively(rootPath, swallow = true)
-        graft.sources.TempRoots.deleteRecursively(stage, swallow = true)
-      }
+      val root = sc.dir("graft_q396_takedown_idx").toString
+      val stage = sc.dir("graft_q396_requests")
+      VersionedLayer.write(Dedup.lshIndexRows(d), root)
+      d.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
+        .repartition(4)
+        .write.mode("overwrite").json(stage.resolve("in").toString)
+      val requestSchema = new org.apache.spark.sql.types.StructType()
+        .add("doc_id", LongType)
+      val requests = s.readStream.schema(requestSchema)
+        .option("maxFilesPerTrigger", 1)
+        .json(stage.resolve("in").toString)
+      EventStream.runOnceForeachBatch(requests, "q396_takedown",
+        (b, id) => VersionedLayer.idempotentDeleteBatch(
+          root, Seq("doc_id"), "q396")(b, id))
+      VersionedLayer.read(s, root)
+        .orderBy(col("doc_id"), col("band_id"))
     }),
 
-    "q202_stream_join_equiv" -> ((s, dir) => {
-      val ev = readEventsStream(s, dir)
+    "q202_stream_join_equiv" -> ((s, dir) => TempRoots.scoped(s) { sc =>
+      val ev = readEventsStream(s, dir, sc)
       val impressions = ev.filter(col("event_type").isin("view", "click"))
       val actions = ev.filter(col("event_type") === "purchase")
       val joined = EventStream.attributeActions(impressions, actions, horizonMin = 60)
-      val sink = s"q202_sink_${sinkSeq.incrementAndGet()}"
+      val sink = sc.sink("q202")
       EventStream.runOnceAppendToMemory(joined, sink)
       s.table(sink).orderBy(col("action_id"), col("impression_id"))
     })
@@ -784,53 +735,53 @@ object StreamParity extends QueryModule {
     // ANN index the batch MERGE path maintains.
     "q392_stream_ann_index_maintenance" ->
       (graft.operators.Similarity.ivfPqIndexSql +
-        """
-          |SELECT asg.vec_id, CAST(asg.cid AS BIGINT) AS cell,
-          |       CAST(codes.b AS BIGINT) AS b, CAST(codes.code AS BIGINT) AS code
-          |FROM asg JOIN codes USING (vec_id)
-          |ORDER BY vec_id, b""".stripMargin),
+      """
+        |SELECT asg.vec_id, CAST(asg.cid AS BIGINT) AS cell,
+        |       CAST(codes.b AS BIGINT) AS b, CAST(codes.code AS BIGINT) AS code
+        |FROM asg JOIN codes USING (vec_id)
+        |ORDER BY vec_id, b""".stripMargin),
 
     // q391: the SAME scratch-rebuild text as q389/q390 (Dedup.lshIndexCte)
     // — the streaming exactly-once path must converge to the identical
     // index the batch MERGE path maintains.
     "q391_stream_index_maintenance" ->
       (graft.operators.Dedup.lshIndexCte +
-        "\nSELECT doc_id, band_id, b0, b1, b2, b3 FROM bands ORDER BY doc_id, band_id"),
+      "\nSELECT doc_id, band_id, b0, b1, b2, b3 FROM bands ORDER BY doc_id, band_id"),
 
     // q396: the SAME filtered rebuild text as q394 — the streaming
     // exactly-once delete path must converge to the identical index the
     // batch deleteKeys path reaches.
     "q396_stream_index_takedown" ->
       (graft.operators.Dedup.lshIndexCte +
-        "\nSELECT doc_id, band_id, b0, b1, b2, b3 FROM bands " +
-        "WHERE doc_id % 13 <> 5 ORDER BY doc_id, band_id"),
+      "\nSELECT doc_id, band_id, b0, b1, b2, b3 FROM bands " +
+      "WHERE doc_id % 13 <> 5 ORDER BY doc_id, band_id"),
 
     "q388_stream_embedding_admission" ->
       """WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |            FROM embeddings WHERE vec_id % 4 = 0),
-        |cp AS (SELECT vec_id + 1000000 AS vec_id,
-        |         list_transform(range(len(v)), i ->
-        |           v[i+1] + CAST((vec_id * 31 + i * 17) % 2001 - 1000 AS DOUBLE) / 1000000.0) AS v
-        |       FROM e0)
-        |SELECT cp.vec_id AS arr_id, e0.vec_id AS ref_id,
-        |       round(list_cosine_similarity(cp.v, e0.v), 6) AS sim
-        |FROM cp CROSS JOIN e0
-        |WHERE round(list_cosine_similarity(cp.v, e0.v), 6) >= 0.9
-        |ORDER BY arr_id, ref_id""".stripMargin,
+      |            FROM embeddings WHERE vec_id % 4 = 0),
+      |cp AS (SELECT vec_id + 1000000 AS vec_id,
+      |         list_transform(range(len(v)), i ->
+      |           v[i+1] + CAST((vec_id * 31 + i * 17) % 2001 - 1000 AS DOUBLE) / 1000000.0) AS v
+      |       FROM e0)
+      |SELECT cp.vec_id AS arr_id, e0.vec_id AS ref_id,
+      |       round(list_cosine_similarity(cp.v, e0.v), 6) AS sim
+      |FROM cp CROSS JOIN e0
+      |WHERE round(list_cosine_similarity(cp.v, e0.v), 6) >= 0.9
+      |ORDER BY arr_id, ref_id""".stripMargin,
 
     // the batch interval join the streaming join must reproduce exactly
     "q202_stream_join_equiv" ->
       """SELECT a.user_id,
-        |       a.event_id AS action_id,
-        |       i.event_id AS impression_id,
-        |       CAST(floor(epoch(a.ts)) AS BIGINT) AS action_ts,
-        |       CAST(floor(epoch(i.ts)) AS BIGINT) AS impression_ts
-        |FROM events a JOIN events i
-        |  ON a.user_id = i.user_id
-        | AND a.event_type = 'purchase'
-        | AND i.event_type IN ('view', 'click')
-        | AND i.ts <= a.ts
-        | AND i.ts >= a.ts - INTERVAL 60 MINUTE
-        |ORDER BY action_id, impression_id""".stripMargin
+      |       a.event_id AS action_id,
+      |       i.event_id AS impression_id,
+      |       CAST(floor(epoch(a.ts)) AS BIGINT) AS action_ts,
+      |       CAST(floor(epoch(i.ts)) AS BIGINT) AS impression_ts
+      |FROM events a JOIN events i
+      |  ON a.user_id = i.user_id
+      | AND a.event_type = 'purchase'
+      | AND i.event_type IN ('view', 'click')
+      | AND i.ts <= a.ts
+      | AND i.ts >= a.ts - INTERVAL 60 MINUTE
+      |ORDER BY action_id, impression_id""".stripMargin
   )
 }

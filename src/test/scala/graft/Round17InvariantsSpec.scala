@@ -150,8 +150,13 @@ class Round17InvariantsSpec extends AnyFunSuite with Matchers {
     // taxed every query that ran later (q10 0.38s -> 2.19s in the close).
     // Pin the cure: after the query function returns, the sink temp view is
     // gone, the stream manager holds no terminated runs, and the RESULT is
-    // still fully readable (materialized before the drop).
-    for (q <- Seq("q379_stream_hll", "q384_stream_cms_topk")) {
+    // still fully readable (materialized before the drop). Every query that
+    // sinks a stream to memory is covered, not only the two that found it.
+    for (q <- Seq("q197_stream_batch_equiv", "q198_stream_dedup_equiv",
+                  "q199_stream_session_equiv", "q201_stream_quarantine",
+                  "q202_stream_join_equiv", "q212_stream_conformal",
+                  "q379_stream_hll", "q384_stream_cms_topk",
+                  "q388_stream_embedding_admission")) {
       val r = SparkEntry.queries(q)(spark, sf0001)
       r.count() should be > 0L // readable after the sink is gone
       val leftover = spark.catalog.listTables()
